@@ -1985,45 +1985,49 @@ object SparkEntry {
             .cast("long").as("revenue_cents"),
           count(lit(1)).cast("long").as("n_rows"))))
 
+  /** DuckDB `read_parquet` over a table under [[Corpus.Root]]. */
+  private def readData(rel: String): String =
+    s"read_parquet('${Corpus.Root}/$rel/*.parquet')"
+
   /** DuckDB-runnable oracles. Column names/types match the Spark outputs
     * exactly (integer-exact expressions only; see query-family note above).
     */
   def oracleSql: Map[String, String] = Map(
     "x_extract_spans" ->
-      "SELECT doc_id, kind, text, media_ref, ord FROM read_parquet('/root/repo/data/golden_spans/sf0.01/*.parquet')",
+      s"SELECT doc_id, kind, text, media_ref, ord FROM ${readData("golden_spans/sf0.01")}",
     "x_extract_spans_custom" ->
-      "SELECT doc_id, kind, text, media_ref, ord FROM read_parquet('/root/repo/data/golden_spans/sf0.01/*.parquet')",
+      s"SELECT doc_id, kind, text, media_ref, ord FROM ${readData("golden_spans/sf0.01")}",
     "x_span_stats" ->
       ("SELECT doc_id, CAST(count(*) AS BIGINT) AS n_spans, " +
         "CAST(count(*) FILTER (WHERE media_ref != '') AS BIGINT) AS n_media, " +
         "CAST(count(DISTINCT kind) AS BIGINT) AS n_kinds, " +
         "CAST(sum(length(text)) AS BIGINT) AS sum_text_chars " +
-        "FROM read_parquet('/root/repo/data/golden_spans/sf0.01/*.parquet') GROUP BY 1"),
+        s"FROM ${readData("golden_spans/sf0.01")} GROUP BY 1"),
     "x_extract_markdown" ->
-      "SELECT doc_id, markdown FROM read_parquet('/root/repo/data/golden_md/sf0.01/*.parquet')",
+      s"SELECT doc_id, markdown FROM ${readData("golden_md/sf0.01")}",
     "x_extract_html" ->
-      "SELECT doc_id, html FROM read_parquet('/root/repo/data/golden_html/sf0.01/*.parquet')",
+      s"SELECT doc_id, html FROM ${readData("golden_html/sf0.01")}",
     "x_corrected_markdown" ->
-      "SELECT doc_id, corrected_md, regex_fired, edit_est FROM read_parquet('/root/repo/data/golden_corrected/sf0.01/*.parquet')",
+      s"SELECT doc_id, corrected_md, regex_fired, edit_est FROM ${readData("golden_corrected/sf0.01")}",
     "x_html_to_markdown" ->
-      "SELECT doc_id, md_from_html FROM read_parquet('/root/repo/data/golden_htmlmd/sf0.01/*.parquet')",
+      s"SELECT doc_id, md_from_html FROM ${readData("golden_htmlmd/sf0.01")}",
     "x_html_to_markdown_atx" ->
-      "SELECT doc_id, md_from_html_atx FROM read_parquet('/root/repo/data/golden_htmlmd_atx/sf0.01/*.parquet')",
+      s"SELECT doc_id, md_from_html_atx FROM ${readData("golden_htmlmd_atx/sf0.01")}",
     "x_html_verify" ->
       ("SELECT doc_id, n_alignment, n_spacing, n_table, n_font_size, n_bold, " +
         "overall_score, needs_correction, report_json " +
-        "FROM read_parquet('/root/repo/data/golden_verify/sf0.01/*.parquet')"),
+        s"FROM ${readData("golden_verify/sf0.01")}"),
     "x_extract_totals" ->
-      "SELECT total_docs, total_spans, total_failures, avg_conf_pm FROM read_parquet('/root/repo/data/golden_totals/sf0.01/*.parquet')",
+      s"SELECT total_docs, total_spans, total_failures, avg_conf_pm FROM ${readData("golden_totals/sf0.01")}",
     "x_extract_metrics" ->
-      "SELECT total_pages, total_spans, total_failures, sum_conf_pm, price_krw FROM read_parquet('/root/repo/data/golden_metrics/sf0.01/*.parquet')",
+      s"SELECT total_pages, total_spans, total_failures, sum_conf_pm, price_krw FROM ${readData("golden_metrics/sf0.01")}",
     // pages restates DocParser.splitPages exactly: a page per DISTINCT
     // page-break NUMBER ('page:N' parsed as int, so 'page:1' and 'page: 1'
     // are ONE page), plus the implicit page 1 when any non-break span
     // precedes the first break (or the doc has spans but no breaks at all);
     // docs with zero spans drop out of both sides
     "x_billing_tiers" ->
-      ("WITH sp AS (SELECT doc_id, unnest(spans) AS s FROM read_parquet('/root/repo/data/corpus/sf0.01/*.parquet')), " +
+      (s"WITH sp AS (SELECT doc_id, unnest(spans) AS s FROM ${readData("corpus/sf0.01")}), " +
         "brk AS (SELECT doc_id, s.\"offset\" AS off, CAST(trim(CASE WHEN s.text LIKE 'page:%' THEN substr(s.text, 6) ELSE s.text END) AS BIGINT) AS pno FROM sp WHERE s.kind = 'page_break'), " +
         "firstbrk AS (SELECT doc_id, min(off) AS first_off FROM brk GROUP BY doc_id), " +
         "imp AS (SELECT sp.doc_id, CAST(1 AS BIGINT) AS pno FROM sp LEFT JOIN firstbrk f ON sp.doc_id = f.doc_id " +
@@ -2039,11 +2043,11 @@ object SparkEntry {
     // extractor output — the strongest oracle shape in the repo: the
     // distributed extractor must reconstruct the plant from raw markup
     "x_web_main_content" ->
-      "SELECT doc_id, kind, text, media_ref, ord FROM read_parquet('/root/repo/data/golden_web/sf0.01/*.parquet')",
+      s"SELECT doc_id, kind, text, media_ref, ord FROM ${readData("golden_web/sf0.01")}",
     // resume gate: the two-snapshot committed union must equal the SAME
     // planted truth — resume correctness reduces to extraction correctness
     "q_web_resume" ->
-      "SELECT doc_id, kind, text, media_ref, ord FROM read_parquet('/root/repo/data/golden_web/sf0.01/*.parquet')",
+      s"SELECT doc_id, kind, text, media_ref, ord FROM ${readData("golden_web/sf0.01")}",
     // lineage-metrics totals: every page parsed exactly once across the two
     // snapshots (pages == distinct planted doc_ids — every generated page
     // plants at least a headline + paragraph), spans == planted count, zero
@@ -2052,24 +2056,24 @@ object SparkEntry {
       ("SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS total_pages, " +
         "CAST(count(*) AS BIGINT) AS total_spans, " +
         "CAST(0 AS BIGINT) AS total_failures " +
-        "FROM read_parquet('/root/repo/data/golden_web/sf0.01/*.parquet')"),
+        s"FROM ${readData("golden_web/sf0.01")}"),
     // streaming ingest reduces to the same planted truth: exactly-once per
     // page across the restart, correct extraction per page
     "q_stream_web_extract" ->
-      "SELECT doc_id, kind, text, media_ref, ord FROM read_parquet('/root/repo/data/golden_web/sf0.01/*.parquet')",
+      s"SELECT doc_id, kind, text, media_ref, ord FROM ${readData("golden_web/sf0.01")}",
     // extract-then-dedup over the planted truth: per-page span signature
     // (kind/text/media_ref joined by control chars in ord order) → md5
     // groups; the planted re-posts land in n_docs=2 groups
     "q_web_content_dedup" ->
       ("WITH sig AS (SELECT doc_id, string_agg(kind || chr(31) || text || chr(31) || media_ref, chr(30) ORDER BY ord) AS s " +
-        "FROM read_parquet('/root/repo/data/golden_web/sf0.01/*.parquet') GROUP BY doc_id) " +
+        s"FROM ${readData("golden_web/sf0.01")} GROUP BY doc_id) " +
         "SELECT md5(s) AS content_md5, CAST(count(*) AS BIGINT) AS n_docs, min(doc_id) AS keep_id " +
         "FROM sig GROUP BY md5(s)"),
     // the golden_web_links parquet is the generator's PLANTED outlink truth
     // (each <a href> recorded at layout time with its chrome/content
     // attribution) — the extractor must reconstruct it from raw markup
     "x_web_outlinks" ->
-      "SELECT doc_id, href, text, from_content, nofollow, ord FROM read_parquet('/root/repo/data/golden_web_links/sf0.01/*.parquet')",
+      s"SELECT doc_id, href, text, from_content, nofollow, ord FROM ${readData("golden_web_links/sf0.01")}",
     // frontier rollup over the same planted truth: per-anchor counts reduce
     // to count(*) because every planted anchor is one reference
     "q_web_frontier" ->
@@ -2077,26 +2081,26 @@ object SparkEntry {
         "CAST(count(*) FILTER (WHERE from_content) AS BIGINT) AS n_content_refs, " +
         "CAST(count(*) FILTER (WHERE NOT nofollow) AS BIGINT) AS n_follow_refs, " +
         "CAST(count(DISTINCT doc_id) AS BIGINT) AS n_pages " +
-        "FROM read_parquet('/root/repo/data/golden_web_links/sf0.01/*.parquet') GROUP BY href"),
+        s"FROM ${readData("golden_web_links/sf0.01")} GROUP BY href"),
     // planted duplicate-pair truth: every re-post page (exact AND near)
     // paired with its source -- the engine's extract-then-near-dup must
     // recover exactly this set (no band luck: the posting-list path is
     // deterministic)
     "q_web_near_dup" ->
       ("SELECT CAST(substr(dup_src, 5) AS BIGINT) AS a, CAST(substr(doc_id, 5) AS BIGINT) AS b " +
-        "FROM read_parquet('/root/repo/data/golden_web_meta/sf0.01/*.parquet') WHERE dup_kind <> ''"),
+        s"FROM ${readData("golden_web_meta/sf0.01")} WHERE dup_kind <> ''"),
     // planted page-metadata truth (head title / robots-noindex / canonical
     // / pagination links) — non-members carry empty prev/next, so the gate
     // pins absence as hard as presence
     "x_web_meta" ->
       ("SELECT doc_id, title, noindex, canonical, prev_url, next_url " +
-        "FROM read_parquet('/root/repo/data/golden_web_meta/sf0.01/*.parquet')"),
+        s"FROM ${readData("golden_web_meta/sf0.01")}"),
     // pagination-chain truth: a recursive walk over the PLANTED prev/next
     // pointers (heads = members with no prev), restating head / position /
     // length with zero knowledge of the engine's pointer doubling
     "q_web_pagination" ->
       ("WITH RECURSIVE m AS (SELECT doc_id, url, prev_url, next_url " +
-        "FROM read_parquet('/root/repo/data/golden_web_meta/sf0.01/*.parquet') " +
+        s"FROM ${readData("golden_web_meta/sf0.01")} " +
         "WHERE prev_url <> '' OR next_url <> ''), " +
         "chain AS (" +
         "SELECT doc_id, url, next_url, url AS head_url, CAST(0 AS BIGINT) AS pos " +
@@ -2111,7 +2115,7 @@ object SparkEntry {
     // one-sided declarer or dropping a validated member breaks the hash
     "q_web_hreflang" ->
       ("SELECT doc_id, alt_group AS grp, alt_lang AS lang " +
-        "FROM read_parquet('/root/repo/data/golden_web_meta/sf0.01/*.parquet') " +
+        s"FROM ${readData("golden_web_meta/sf0.01")} " +
         "WHERE alt_group <> ''"),
     // ld+json truth: carriers are exactly the pages with a planted
     // published date; the parsed headline must equal the planted head
@@ -2119,13 +2123,13 @@ object SparkEntry {
     // the engine's unescape round-trip too)
     "q_web_ldjson" ->
       ("SELECT doc_id, 'NewsArticle' AS ld_type, title AS headline, published " +
-        "FROM read_parquet('/root/repo/data/golden_web_meta/sf0.01/*.parquet') " +
+        s"FROM ${readData("golden_web_meta/sf0.01")} " +
         "WHERE published <> ''"),
     // chain-document truth: the recursive pointer walk joined to the
     // planted span truth, renumbered by the same (pos, ord) total order
     "q_web_chain_docs" ->
       ("WITH RECURSIVE m AS (SELECT doc_id, url, prev_url, next_url " +
-        "FROM read_parquet('/root/repo/data/golden_web_meta/sf0.01/*.parquet') " +
+        s"FROM ${readData("golden_web_meta/sf0.01")} " +
         "WHERE prev_url <> '' OR next_url <> ''), " +
         "chain AS (" +
         "SELECT doc_id, url, next_url, url AS head_url, CAST(0 AS BIGINT) AS pos " +
@@ -2135,13 +2139,13 @@ object SparkEntry {
         "FROM chain c JOIN m ON m.url = c.next_url) " +
         "SELECT c.head_url, s.kind, s.text, s.media_ref, " +
         "CAST(row_number() OVER (PARTITION BY c.head_url ORDER BY c.pos, s.ord) - 1 AS BIGINT) AS ord " +
-        "FROM chain c JOIN read_parquet('/root/repo/data/golden_web/sf0.01/*.parquet') s " +
+        s"FROM chain c JOIN ${readData("golden_web/sf0.01")} s " +
         "ON s.doc_id = c.doc_id"),
     // language-pick truth: the preferred-then-lexicographic total order
     // restated over the planted reciprocal-group truth
     "q_web_lang_pick" ->
       ("SELECT alt_group AS grp, doc_id, alt_lang AS lang " +
-        "FROM read_parquet('/root/repo/data/golden_web_meta/sf0.01/*.parquet') " +
+        s"FROM ${readData("golden_web_meta/sf0.01")} " +
         "WHERE alt_group <> '' " +
         "QUALIFY row_number() OVER (PARTITION BY alt_group " +
         "ORDER BY (alt_lang <> 'ko'), alt_lang, doc_id) = 1"),
@@ -2149,7 +2153,7 @@ object SparkEntry {
     "q_web_freshness" ->
       ("SELECT regexp_extract(url, '^https://([^/]+)', 1) AS host, " +
         "substr(published, 1, 7) AS month, CAST(count(*) AS BIGINT) AS n_pages " +
-        "FROM read_parquet('/root/repo/data/golden_web_meta/sf0.01/*.parquet') " +
+        s"FROM ${readData("golden_web_meta/sf0.01")} " +
         "WHERE published <> '' GROUP BY 1, 2"),
     // head-stats truth: chain membership and ld coverage read straight off
     // the planted truth; hreflang DECLARATION restated in the plant's
@@ -2161,7 +2165,7 @@ object SparkEntry {
       ("WITH m AS (SELECT doc_id, url, prev_url, next_url, alt_group, published, " +
         "CAST(substr(doc_id, 5) AS BIGINT) AS id, " +
         "regexp_extract(url, '^https://([^/]+)', 1) AS host " +
-        "FROM read_parquet('/root/repo/data/golden_web_meta/sf0.01/*.parquet')), " +
+        s"FROM ${readData("golden_web_meta/sf0.01")}), " +
         "tot AS (SELECT count(*) AS docs FROM m), " +
         "d AS (SELECT m.*, CASE WHEN id % 73 IN (4, 5) THEN id - (id % 73 - 4) " +
         "ELSE -1 END AS base FROM m), " +
@@ -2177,12 +2181,12 @@ object SparkEntry {
         "FROM e GROUP BY host"),
     // noindex admission rollup: planted flags x planted span counts
     "q_web_indexable" ->
-      ("WITH s AS (SELECT doc_id, count(*) AS n FROM read_parquet('/root/repo/data/golden_web/sf0.01/*.parquet') GROUP BY doc_id) " +
+      (s"WITH s AS (SELECT doc_id, count(*) AS n FROM ${readData("golden_web/sf0.01")} GROUP BY doc_id) " +
         "SELECT CAST(count(*) AS BIGINT) AS total_pages, " +
         "CAST(count(*) FILTER (WHERE noindex) AS BIGINT) AS n_noindex, " +
         "CAST(count(*) FILTER (WHERE NOT noindex) AS BIGINT) AS n_indexable, " +
         "CAST(coalesce(sum(n) FILTER (WHERE NOT noindex), 0) AS BIGINT) AS indexable_spans " +
-        "FROM read_parquet('/root/repo/data/golden_web_meta/sf0.01/*.parquet') m JOIN s USING (doc_id)"),
+        s"FROM ${readData("golden_web_meta/sf0.01")} m JOIN s USING (doc_id)"),
     // robots-admission truth in CLOSED FORM: the planted per-host policies
     // (WebGen.robotsTxt) were designed so the graftbot verdict is a pure
     // function of the URL — portal-3's agent-specific group disallows
@@ -2193,7 +2197,7 @@ object SparkEntry {
       ("WITH p AS (SELECT doc_id, url, " +
         "regexp_extract(url, '^https://([^/]+)', 1) AS host, " +
         "regexp_extract(url, '^https://[^/]+(/.*)$', 1) AS path " +
-        "FROM read_parquet('/root/repo/data/web/sf0.01/*.parquet')) " +
+        s"FROM ${readData("web/sf0.01")}) " +
         "SELECT doc_id, url, " +
         "CASE WHEN host = 'repost-archive.example' THEN path LIKE '/p/1%' " +
         "WHEN host = 'portal-3.law.example' THEN path NOT LIKE '%3' " +
@@ -2205,7 +2209,7 @@ object SparkEntry {
     // -- if the engine leaked them, rows/hash break.
     "q_web_sitemap" ->
       ("WITH crawled AS (SELECT url, CAST(regexp_extract(url, '([0-9]+)$', 1) AS BIGINT) AS id " +
-        "FROM read_parquet('/root/repo/data/web/sf0.01/*.parquet')), " +
+        s"FROM ${readData("web/sf0.01")}), " +
         "frontier AS (" +
         "SELECT 'https://portal-' || k || '.law.example/case/' || CAST(900000000 + k*10 + j AS VARCHAR) AS url, " +
         "900000000 + k*10 + j AS id " +
@@ -2229,9 +2233,9 @@ object SparkEntry {
         "regexp_extract(url, '^https://([^/]+)', 1) AS host, " +
         "regexp_extract(url, '^https://[^/]+(/.*)$', 1) AS path, " +
         "CAST(regexp_extract(url, '([0-9]+)$', 1) AS BIGINT) AS id " +
-        "FROM read_parquet('/root/repo/data/web/sf0.01/*.parquet')), " +
-        "m AS (SELECT doc_id, noindex, soft404 FROM read_parquet('/root/repo/data/golden_web_meta/sf0.01/*.parquet')), " +
-        "sp AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM read_parquet('/root/repo/data/golden_web/sf0.01/*.parquet') GROUP BY 1), " +
+        s"FROM ${readData("web/sf0.01")}), " +
+        s"m AS (SELECT doc_id, noindex, soft404 FROM ${readData("golden_web_meta/sf0.01")}), " +
+        s"sp AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM ${readData("golden_web/sf0.01")} GROUP BY 1), " +
         "j AS (SELECT p.host, " +
         "CASE WHEN p.host = 'repost-archive.example' THEN p.path LIKE '/p/1%' " +
         "WHEN p.host = 'portal-3.law.example' THEN p.path NOT LIKE '%3' " +
@@ -2253,10 +2257,10 @@ object SparkEntry {
     "q_web_citations" ->
       ("WITH cites AS (SELECT doc_id, CAST(regexp_extract(text, '2026가합([0-9]+)호', 1) AS BIGINT) AS cited, " +
         "CAST(count(*) AS BIGINT) AS mentions " +
-        "FROM read_parquet('/root/repo/data/golden_web/sf0.01/*.parquet') " +
+        s"FROM ${readData("golden_web/sf0.01")} " +
         "WHERE kind <> 'media' AND regexp_matches(text, '2026가합[0-9]+호') GROUP BY 1, 2), " +
         "targets AS (SELECT CAST(regexp_extract(url, '/case/([0-9]+)$', 1) AS BIGINT) AS cited, doc_id AS target_id " +
-        "FROM read_parquet('/root/repo/data/web/sf0.01/*.parquet') WHERE regexp_matches(url, '/case/[0-9]+$')) " +
+        s"FROM ${readData("web/sf0.01")} WHERE regexp_matches(url, '/case/[0-9]+$$')) " +
         "SELECT c.doc_id, c.cited, c.mentions, coalesce(t.target_id, '') AS target_id, " +
         "coalesce(t.target_id = c.doc_id, FALSE) AS self_cite " +
         "FROM cites c LEFT JOIN targets t USING (cited)"),
@@ -2265,27 +2269,27 @@ object SparkEntry {
     // split reader must reproduce every row byte for byte, exactly once
     "q_warc_source" ->
       ("SELECT doc_id, url, md5(html) AS html_md5 " +
-        "FROM read_parquet('/root/repo/data/web/sf0.01/*.parquet')"),
+        s"FROM ${readData("web/sf0.01")}"),
     // canonical-edge truth: only cross-page canonicals survive (self-
     // canonicals are hygiene, not edges); the resolved target is the
     // planted source, and content equality holds iff the re-post is exact
     "q_web_canonical" ->
       ("SELECT doc_id, dup_src AS canonical_id, dup_kind = 'exact' AS same_content " +
-        "FROM read_parquet('/root/repo/data/golden_web_meta/sf0.01/*.parquet') " +
+        s"FROM ${readData("golden_web_meta/sf0.01")} " +
         "WHERE canonical <> '' AND canonical <> url"),
     // planted recrawl-delta truth (the generator's revision rules: updated
     // leads, dropped pages, new ids, re-posts inheriting source change)
     "q_web_recrawl_delta" ->
-      "SELECT doc_id, status FROM read_parquet('/root/repo/data/golden_web_delta/sf0.01/*.parquet')",
+      s"SELECT doc_id, status FROM ${readData("golden_web_delta/sf0.01")}",
     // planted soft-404 flag per page (error pages and their re-posts)
     "q_web_soft404" ->
-      "SELECT doc_id, soft404 FROM read_parquet('/root/repo/data/golden_web_meta/sf0.01/*.parquet')",
+      s"SELECT doc_id, soft404 FROM ${readData("golden_web_meta/sf0.01")}",
     // the golden_web_blocks parquet is the generator's PLANTED segmentation
     // truth (every block recorded at layout time with tag / keep / image
     // count / normalized text) — the extractor must reconstruct it from raw
     // markup, block for block
     "x_web_blocks" ->
-      "SELECT doc_id, ord, tag, is_content, n_media, text FROM read_parquet('/root/repo/data/golden_web_blocks/sf0.01/*.parquet')",
+      s"SELECT doc_id, ord, tag, is_content, n_media, text FROM ${readData("golden_web_blocks/sf0.01")}",
     // eval truth in pure SQL: the baseline is length-only, so it is fully
     // computable from the PLANTED normal-form text (x_web_blocks pins the
     // engine's segmentation to exactly that text); `//` is DuckDB integer
@@ -2293,8 +2297,8 @@ object SparkEntry {
     "q_web_extract_eval" ->
       ("WITH b AS (SELECT m.doc_id, regexp_extract(m.url, '^https://([^/]+)', 1) AS host, " +
         "t.is_content, length(replace(t.text, ' ', '')) >= 80 AS base_keep " +
-        "FROM read_parquet('/root/repo/data/golden_web_blocks/sf0.01/*.parquet') t " +
-        "JOIN read_parquet('/root/repo/data/golden_web_meta/sf0.01/*.parquet') m USING (doc_id)), " +
+        s"FROM ${readData("golden_web_blocks/sf0.01")} t " +
+        s"JOIN ${readData("golden_web_meta/sf0.01")} m USING (doc_id)), " +
         "c AS (SELECT host, CAST(count(*) AS BIGINT) AS n_blocks, " +
         "CAST(count(*) FILTER (WHERE base_keep AND is_content) AS BIGINT) AS tp, " +
         "CAST(count(*) FILTER (WHERE base_keep AND NOT is_content) AS BIGINT) AS fp, " +
@@ -2311,7 +2315,7 @@ object SparkEntry {
     // arithmetic
     "q_web_eval_curve" ->
       ("WITH b AS (SELECT t.is_content, length(replace(t.text, ' ', '')) AS nws " +
-        "FROM read_parquet('/root/repo/data/golden_web_blocks/sf0.01/*.parquet') t), " +
+        s"FROM ${readData("golden_web_blocks/sf0.01")} t), " +
         "c AS (SELECT th.threshold, CAST(count(*) AS BIGINT) AS n_blocks, " +
         "CAST(count(*) FILTER (WHERE nws >= th.threshold AND is_content) AS BIGINT) AS tp, " +
         "CAST(count(*) FILTER (WHERE nws >= th.threshold AND NOT is_content) AS BIGINT) AS fp, " +
@@ -2327,9 +2331,9 @@ object SparkEntry {
     // page counts over ≥ 5 pages, with the content-block tally the plant
     // decided at layout time
     "q_web_templates" ->
-      ("WITH b AS (SELECT doc_id, text, is_content FROM read_parquet('/root/repo/data/golden_web_blocks/sf0.01/*.parquet') WHERE text <> ''), " +
+      (s"WITH b AS (SELECT doc_id, text, is_content FROM ${readData("golden_web_blocks/sf0.01")} WHERE text <> ''), " +
         "m AS (SELECT doc_id, split_part(replace(url, 'https://', ''), '/', 1) AS host " +
-        "FROM read_parquet('/root/repo/data/golden_web_meta/sf0.01/*.parquet')), " +
+        s"FROM ${readData("golden_web_meta/sf0.01")}), " +
         "p AS (SELECT m.host, b.text, b.doc_id, count(*) AS nb, " +
         "count(*) FILTER (WHERE b.is_content) AS nc " +
         "FROM b JOIN m USING (doc_id) GROUP BY 1, 2, 3) " +
@@ -2342,14 +2346,14 @@ object SparkEntry {
     // span and one chrome link, so the inner joins lose nothing
     "q_web_host_stats" ->
       ("WITH m AS (SELECT doc_id, split_part(replace(url, 'https://', ''), '/', 1) AS host, noindex " +
-        "FROM read_parquet('/root/repo/data/golden_web_meta/sf0.01/*.parquet')), " +
+        s"FROM ${readData("golden_web_meta/sf0.01")}), " +
         "s AS (SELECT doc_id, count(*) AS n_spans, " +
         "count(*) FILTER (WHERE kind = 'media') AS n_media, " +
         "coalesce(sum(length(text)), 0) AS chars " +
-        "FROM read_parquet('/root/repo/data/golden_web/sf0.01/*.parquet') GROUP BY doc_id), " +
+        s"FROM ${readData("golden_web/sf0.01")} GROUP BY doc_id), " +
         "l AS (SELECT doc_id, count(*) FILTER (WHERE from_content) AS n_content, " +
         "count(*) FILTER (WHERE NOT nofollow) AS n_follow " +
-        "FROM read_parquet('/root/repo/data/golden_web_links/sf0.01/*.parquet') GROUP BY doc_id) " +
+        s"FROM ${readData("golden_web_links/sf0.01")} GROUP BY doc_id) " +
         "SELECT m.host, CAST(count(*) AS BIGINT) AS n_pages, " +
         "CAST(count(*) FILTER (WHERE m.noindex) AS BIGINT) AS n_noindex, " +
         "CAST(sum(s.n_spans) AS BIGINT) AS n_spans, " +
@@ -2363,21 +2367,21 @@ object SparkEntry {
         "CAST(count(*) FILTER (WHERE kind = 'heading') AS BIGINT) AS n_heading, " +
         "CAST(count(*) FILTER (WHERE kind = 'media') AS BIGINT) AS n_media, " +
         "CAST(coalesce(sum(length(text)), 0) AS BIGINT) AS main_chars " +
-        "FROM read_parquet('/root/repo/data/golden_web/sf0.01/*.parquet') GROUP BY doc_id"),
+        s"FROM ${readData("golden_web/sf0.01")} GROUP BY doc_id"),
     "q_stream_dedup" ->
       ("WITH p1 AS (SELECT md5(text) AS content_md5, min(doc_id) AS doc_id FROM documents WHERE doc_id % 2 = 0 GROUP BY md5(text)), " +
         "p2 AS (SELECT md5(text) AS content_md5, min(doc_id) AS doc_id FROM documents WHERE doc_id % 2 = 1 AND md5(text) NOT IN (SELECT content_md5 FROM p1) GROUP BY md5(text)), " +
         "u AS (SELECT * FROM p1 UNION ALL SELECT * FROM p2) " +
         "SELECT u.content_md5, CAST(u.doc_id AS BIGINT) AS doc_id, d.text FROM u JOIN documents d ON u.doc_id = d.doc_id"),
     "q_resume_extract" ->
-      "SELECT doc_id, kind, text, media_ref, ord FROM read_parquet('/root/repo/data/golden_spans/sf0.01/*.parquet')",
+      s"SELECT doc_id, kind, text, media_ref, ord FROM ${readData("golden_spans/sf0.01")}",
     "q_snapshot_asof" ->
-      ("SELECT doc_id, kind, text, media_ref, ord FROM read_parquet('/root/repo/data/golden_spans/sf0.01/*.parquet') " +
+      (s"SELECT doc_id, kind, text, media_ref, ord FROM ${readData("golden_spans/sf0.01")} " +
         "WHERE substr(doc_id, 13, 1) IN ('0','2','4','6','8')"),
     "q_compacted_extract" ->
-      "SELECT doc_id, kind, text, media_ref, ord FROM read_parquet('/root/repo/data/golden_spans/sf0.01/*.parquet')",
+      s"SELECT doc_id, kind, text, media_ref, ord FROM ${readData("golden_spans/sf0.01")}",
     "q_upsert_extract" ->
-      "SELECT doc_id, kind, text, media_ref, ord FROM read_parquet('/root/repo/data/golden_spans/sf0.01/*.parquet')",
+      s"SELECT doc_id, kind, text, media_ref, ord FROM ${readData("golden_spans/sf0.01")}",
     "q_bucketed_join" ->
       ("SELECT c_mktsegment, CAST(count(*) AS BIGINT) AS n_orders, " +
         "CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS revenue_cents " +
@@ -2504,7 +2508,7 @@ object SparkEntry {
         "CAST(l.n_types AS HUGEINT) AS BIGINT) AS r_star_pm " +
         "FROM sp l LEFT JOIN sp r ON l.tf + 1 = r.tf"),
     "q_retrieval_mrr" ->
-      ("WITH r AS (SELECT q_id, doc_id, rank FROM read_parquet('/root/repo/data/golden_ops/sf0.01/bm25/*.parquet')), " +
+      (s"WITH r AS (SELECT q_id, doc_id, rank FROM ${readData("golden_ops/sf0.01/bm25")}), " +
         "q AS (SELECT * FROM (VALUES (0, 'join hash batch'), (1, 'customer filter'), " +
         "(2, 'scan column row'), (3, 'slow small join'), (4, 'zzz_absent'), " +
         "(5, 'hash hash join')) t(q_id, qtext)), " +
@@ -2587,7 +2591,7 @@ object SparkEntry {
     // sequential-oracle goldens (graft.oracle.OpsOracle → OpsGolden):
     // non-SQL-expressible dedup/similarity ops, hash-checked via parquet
     "q_ngram_jaccard_pairs" ->
-      "SELECT a, b, n_inter, n_a, n_b, jaccard_pm FROM read_parquet('/root/repo/data/golden_ops/sf0.01/ngram/*.parquet')",
+      s"SELECT a, b, n_inter, n_a, n_b, jaccard_pm FROM ${readData("golden_ops/sf0.01/ngram")}",
     // full restatement of containmentPairs: shingle sets as n-gram STRINGS
     // (collision-free hash ⇒ identical distinct counts), df-cap prefilter on
     // capped intersections, exact verify, integer-div per-mille score
@@ -2645,10 +2649,10 @@ object SparkEntry {
         "CAST(coalesce(mn.subsumed_by, -1) AS BIGINT) AS subsumed_by " +
         "FROM documents d0 LEFT JOIN mn ON CAST(d0.doc_id AS BIGINT) = mn.doc_id"),
     "q_minhash_near_dup" ->
-      "SELECT a, b, jaccard_pm FROM read_parquet('/root/repo/data/golden_ops/sf0.01/minhash/*.parquet')",
+      s"SELECT a, b, jaccard_pm FROM ${readData("golden_ops/sf0.01/minhash")}",
     "q_near_dup_eval" ->
-      ("WITH t AS (SELECT a, b FROM read_parquet('/root/repo/data/golden_ops/sf0.01/ngram/*.parquet')), " +
-        "f AS (SELECT a, b FROM read_parquet('/root/repo/data/golden_ops/sf0.01/minhash/*.parquet')), " +
+      (s"WITH t AS (SELECT a, b FROM ${readData("golden_ops/sf0.01/ngram")}), " +
+        s"f AS (SELECT a, b FROM ${readData("golden_ops/sf0.01/minhash")}), " +
         "n AS (SELECT (SELECT count(*) FROM t) AS n_true, " +
         "(SELECT count(*) FROM f) AS n_found, " +
         "(SELECT count(*) FROM t JOIN f USING (a, b)) AS n_correct) " +
@@ -2657,16 +2661,16 @@ object SparkEntry {
         "CAST((n_correct * 1000) // greatest(n_found, 1) AS BIGINT) AS precision_pm, " +
         "CAST((n_correct * 1000) // greatest(n_true, 1) AS BIGINT) AS recall_pm FROM n"),
     "q_dup_source_matrix" ->
-      ("WITH p AS (SELECT a, b FROM read_parquet('/root/repo/data/golden_ops/sf0.01/minhash/*.parquet')), " +
+      (s"WITH p AS (SELECT a, b FROM ${readData("golden_ops/sf0.01/minhash")}), " +
         "j AS (SELECT least(da.source, db.source) AS source_lo, greatest(da.source, db.source) AS source_hi " +
         "FROM p JOIN documents da ON p.a = da.doc_id JOIN documents db ON p.b = db.doc_id) " +
         "SELECT source_lo, source_hi, CAST(count(*) AS BIGINT) AS n_pairs FROM j GROUP BY 1, 2"),
     "q_simhash_near_dup" ->
-      "SELECT a, b, hamming FROM read_parquet('/root/repo/data/golden_ops/sf0.01/simhash/*.parquet')",
+      s"SELECT a, b, hamming FROM ${readData("golden_ops/sf0.01/simhash")}",
     "q_winnow_dup" ->
-      "SELECT a, b, n_shared FROM read_parquet('/root/repo/data/golden_ops/sf0.01/winnow/*.parquet')",
+      s"SELECT a, b, n_shared FROM ${readData("golden_ops/sf0.01/winnow")}",
     "q_source_overlap" ->
-      "SELECT a, b, n_agree, jaccard_pm FROM read_parquet('/root/repo/data/golden_ops/sf0.01/srcover/*.parquet')",
+      s"SELECT a, b, n_agree, jaccard_pm FROM ${readData("golden_ops/sf0.01/srcover")}",
     // link graph restated end-to-end: same md5 edge derivation, degrees
     "q_link_degrees" ->
       ("WITH e0 AS (SELECT d.doc_id AS src, r.j, " +
@@ -2709,16 +2713,16 @@ object SparkEntry {
         "GROUP BY 1, 2 HAVING count(*) >= 1"),
     "q_hits" ->
       ("SELECT doc_id, auth_micro, hub_micro " +
-        "FROM read_parquet('/root/repo/data/golden_ops/sf0.01/hits/*.parquet')"),
+        s"FROM ${readData("golden_ops/sf0.01/hits")}"),
     "q_pagerank" ->
-      "SELECT doc_id, rank_micro FROM read_parquet('/root/repo/data/golden_ops/sf0.01/pagerank/*.parquet')",
+      s"SELECT doc_id, rank_micro FROM ${readData("golden_ops/sf0.01/pagerank")}",
     "q_trustrank" ->
-      "SELECT doc_id, rank_micro FROM read_parquet('/root/repo/data/golden_ops/sf0.01/trustrank/*.parquet')",
+      s"SELECT doc_id, rank_micro FROM ${readData("golden_ops/sf0.01/trustrank")}",
     "q_source_authority" ->
       ("SELECT d.source, CAST(count(*) AS BIGINT) AS n_docs, " +
         "CAST(sum(p.rank_micro) AS BIGINT) AS sum_rank_micro, " +
         "CAST(max(p.rank_micro) AS BIGINT) AS max_rank_micro " +
-        "FROM read_parquet('/root/repo/data/golden_ops/sf0.01/pagerank/*.parquet') p " +
+        s"FROM ${readData("golden_ops/sf0.01/pagerank")} p " +
         "JOIN documents d USING (doc_id) GROUP BY 1"),
     "q_link_nepotism" ->
       ("WITH e0 AS (SELECT d.doc_id AS src, r.j, " +
@@ -2829,27 +2833,27 @@ object SparkEntry {
         "SELECT deg_kind, CAST(bucket AS BIGINT) AS bucket, " +
         "CAST(count(*) AS BIGINT) AS n_nodes FROM b GROUP BY 1, 2"),
     "q_dedup_clusters" ->
-      "SELECT doc_id, cluster_id, n_members, is_keep FROM read_parquet('/root/repo/data/golden_ops/sf0.01/clusters/*.parquet')",
+      s"SELECT doc_id, cluster_id, n_members, is_keep FROM ${readData("golden_ops/sf0.01/clusters")}",
     "q_dedup_clusters_star" ->
-      "SELECT doc_id, cluster_id, n_members, is_keep FROM read_parquet('/root/repo/data/golden_ops/sf0.01/clusters/*.parquet')",
+      s"SELECT doc_id, cluster_id, n_members, is_keep FROM ${readData("golden_ops/sf0.01/clusters")}",
     "q_ann_brute_topk" ->
-      "SELECT q_id, n_id, rank, score_pm FROM read_parquet('/root/repo/data/golden_ops/sf0.01/ann_brute/*.parquet')",
+      s"SELECT q_id, n_id, rank, score_pm FROM ${readData("golden_ops/sf0.01/ann_brute")}",
     "q_ann_lsh_topk" ->
-      "SELECT q_id, n_id, rank, score_pm FROM read_parquet('/root/repo/data/golden_ops/sf0.01/ann_lsh/*.parquet')",
+      s"SELECT q_id, n_id, rank, score_pm FROM ${readData("golden_ops/sf0.01/ann_lsh")}",
     "q_ann_ivf_topk" ->
-      "SELECT q_id, n_id, rank, score_pm FROM read_parquet('/root/repo/data/golden_ops/sf0.01/ann_ivf/*.parquet')",
+      s"SELECT q_id, n_id, rank, score_pm FROM ${readData("golden_ops/sf0.01/ann_ivf")}",
     "q_ann_ivf_kmeans_topk" ->
-      "SELECT q_id, n_id, rank, score_pm FROM read_parquet('/root/repo/data/golden_ops/sf0.01/ann_ivf_km/*.parquet')",
+      s"SELECT q_id, n_id, rank, score_pm FROM ${readData("golden_ops/sf0.01/ann_ivf_km")}",
     "q_ann_q8_topk" ->
-      "SELECT q_id, n_id, rank, score_int FROM read_parquet('/root/repo/data/golden_ops/sf0.01/ann_q8/*.parquet')",
+      s"SELECT q_id, n_id, rank, score_int FROM ${readData("golden_ops/sf0.01/ann_q8")}",
     "q_ann_ivfpq_topk" ->
-      "SELECT q_id, n_id, rank, score_pm FROM read_parquet('/root/repo/data/golden_ops/sf0.01/ann_ivfpq/*.parquet')",
+      s"SELECT q_id, n_id, rank, score_pm FROM ${readData("golden_ops/sf0.01/ann_ivfpq")}",
     "q_ann_ivfpq_rerank" ->
-      "SELECT q_id, n_id, rank, score_pm FROM read_parquet('/root/repo/data/golden_ops/sf0.01/ann_ivfpq_rr/*.parquet')",
+      s"SELECT q_id, n_id, rank, score_pm FROM ${readData("golden_ops/sf0.01/ann_ivfpq_rr")}",
     "q_emb_near_dup" ->
-      "SELECT a, b, score_pm FROM read_parquet('/root/repo/data/golden_ops/sf0.01/embdup/*.parquet')",
+      s"SELECT a, b, score_pm FROM ${readData("golden_ops/sf0.01/embdup")}",
     "q_contrastive_pairs" ->
-      ("WITH p AS (SELECT a AS anchor, b AS positive FROM read_parquet('/root/repo/data/golden_ops/sf0.01/embdup/*.parquet')), " +
+      (s"WITH p AS (SELECT a AS anchor, b AS positive FROM ${readData("golden_ops/sf0.01/embdup")}), " +
         "nv AS (SELECT count(*) AS n FROM embeddings), " +
         "an AS (SELECT DISTINCT anchor FROM p), " +
         "cand AS (SELECT an.anchor, r.j, " +
@@ -2866,23 +2870,23 @@ object SparkEntry {
         "SELECT p.anchor, p.positive, rk.negative, CAST(rk.neg_rank AS BIGINT) AS neg_rank " +
         "FROM p JOIN rk USING (anchor) WHERE rk.neg_rank <= 2"),
     "q_media_features" ->
-      "SELECT doc_id, media_ref, n_bytes, content_h64 FROM read_parquet('/root/repo/data/golden_ops/sf0.01/media/*.parquet')",
+      s"SELECT doc_id, media_ref, n_bytes, content_h64 FROM ${readData("golden_ops/sf0.01/media")}",
     "q_media_frames" ->
       ("SELECT doc_id, media_ref, CAST(n_frames AS INT) AS n_frames, " +
         "CAST(frame_no AS INT) AS frame_no, frame_md5, pooled_micro " +
-        "FROM read_parquet('/root/repo/data/golden_ops/sf0.01/frames/*.parquet')"),
+        s"FROM ${readData("golden_ops/sf0.01/frames")}"),
     "q_media_reuse" ->
       ("SELECT media_ref, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs, " +
         "CAST(count(*) AS BIGINT) AS n_spans, CAST(min(n_bytes) AS BIGINT) AS n_bytes, " +
         "min(doc_id) AS keep_doc " +
-        "FROM read_parquet('/root/repo/data/golden_ops/sf0.01/media/*.parquet') GROUP BY 1"),
+        s"FROM ${readData("golden_ops/sf0.01/media")} GROUP BY 1"),
     "q_decontam" ->
-      "SELECT doc_id, n_overlap, contaminated FROM read_parquet('/root/repo/data/golden_ops/sf0.01/decontam/*.parquet')",
+      s"SELECT doc_id, n_overlap, contaminated FROM ${readData("golden_ops/sf0.01/decontam")}",
     "q_pack_sequences" ->
-      "SELECT doc_id, n_tokens, bucket, seq_id, pos FROM read_parquet('/root/repo/data/golden_ops/sf0.01/packing/*.parquet')",
+      s"SELECT doc_id, n_tokens, bucket, seq_id, pos FROM ${readData("golden_ops/sf0.01/packing")}",
     "q_training_manifest" ->
       ("WITH s AS (SELECT seq_id, count(*) AS n_items, sum(n_tokens) AS sum_tokens " +
-        "FROM read_parquet('/root/repo/data/golden_ops/sf0.01/manifest/*.parquet') GROUP BY 1), " +
+        s"FROM ${readData("golden_ops/sf0.01/manifest")} GROUP BY 1), " +
         "h AS (SELECT seq_id, n_items, sum_tokens, md5('shard:' || seq_id) AS ord FROM s) " +
         "SELECT seq_id, CAST(n_items AS BIGINT) AS n_items, CAST(sum_tokens AS BIGINT) AS sum_tokens, " +
         "CAST(('0x' || substr(ord, 1, 8))::BIGINT % 8 AS BIGINT) AS shard, " +
@@ -2890,14 +2894,14 @@ object SparkEntry {
         "ORDER BY ord, seq_id) AS BIGINT) AS shard_pos FROM h"),
     "q_train_shards" ->
       ("WITH s AS (SELECT seq_id, count(*) AS n_items, sum(n_tokens) AS sum_tokens " +
-        "FROM read_parquet('/root/repo/data/golden_ops/sf0.01/packing/*.parquet') GROUP BY 1), " +
+        s"FROM ${readData("golden_ops/sf0.01/packing")} GROUP BY 1), " +
         "h AS (SELECT seq_id, n_items, sum_tokens, md5('shard:' || seq_id) AS ord FROM s) " +
         "SELECT seq_id, CAST(n_items AS BIGINT) AS n_items, CAST(sum_tokens AS BIGINT) AS sum_tokens, " +
         "CAST(('0x' || substr(ord, 1, 8))::BIGINT % 8 AS BIGINT) AS shard, " +
         "CAST(row_number() OVER (PARTITION BY ('0x' || substr(ord, 1, 8))::BIGINT % 8 " +
         "ORDER BY ord, seq_id) AS BIGINT) AS shard_pos FROM h"),
     "q_chunk_pack" ->
-      "SELECT item_id, n_tokens, bucket, seq_id, pos FROM read_parquet('/root/repo/data/golden_ops/sf0.01/chunkpack/*.parquet')",
+      s"SELECT item_id, n_tokens, bucket, seq_id, pos FROM ${readData("golden_ops/sf0.01/chunkpack")}",
     "q_incremental_dedup" ->
       ("WITH hashed AS (SELECT doc_id, md5(text) AS content_md5 FROM documents), " +
         "committed AS (SELECT DISTINCT md5(text) AS content_md5 FROM documents WHERE doc_id % 3 = 0), " +
@@ -2912,7 +2916,7 @@ object SparkEntry {
         "ANTI JOIN committed c ON f.content_md5 = c.content_md5"),
     "q_incremental_near_dup" ->
       ("SELECT doc_id, match_id, agree_pm, is_new " +
-        "FROM read_parquet('/root/repo/data/golden_ops/sf0.01/incnd/*.parquet')"),
+        s"FROM ${readData("golden_ops/sf0.01/incnd")}"),
     "q_dup_windows" ->
       ("WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '[ \\t\\n\\x0B\\f\\r]+') AS toks " +
         "FROM documents WHERE length(trim(text)) > 0), " +
@@ -2927,7 +2931,7 @@ object SparkEntry {
         "FROM b LEFT JOIN d USING (doc_id)"),
     "q_exact_substr" ->
       ("SELECT doc_id, start_tok, end_tok, len_toks " +
-        "FROM read_parquet('/root/repo/data/golden_ops/sf0.01/exactsub/*.parquet')"),
+        s"FROM ${readData("golden_ops/sf0.01/exactsub")}"),
     "q_doc_seg_clean" ->
       ("WITH t AS (SELECT doc_id, CASE WHEN length(trim(text)) = 0 THEN CAST([] AS VARCHAR[]) " +
         "ELSE regexp_split_to_array(trim(text), '[ \\t\\n\\x0B\\f\\r]+') END AS toks FROM documents), " +
@@ -2945,20 +2949,20 @@ object SparkEntry {
         "coalesce(k.clean_md5, md5('')) AS clean_md5 " +
         "FROM c LEFT JOIN k USING (doc_id)"),
     "q_semantic_dedup" ->
-      "SELECT vec_id, cell, dup_of, keep FROM read_parquet('/root/repo/data/golden_ops/sf0.01/semdedup/*.parquet')",
+      s"SELECT vec_id, cell, dup_of, keep FROM ${readData("golden_ops/sf0.01/semdedup")}",
     "q_bpe_merges" ->
-      "SELECT rank, \"left\", \"right\", n_occ FROM read_parquet('/root/repo/data/golden_ops/sf0.01/bpe/*.parquet')",
+      s"SELECT rank, \"left\", \"right\", n_occ FROM ${readData("golden_ops/sf0.01/bpe")}",
     "q_wordpiece_merges" ->
-      "SELECT rank, \"left\", \"right\", n_occ, l_cnt, r_cnt FROM read_parquet('/root/repo/data/golden_ops/sf0.01/wpm/*.parquet')",
+      s"SELECT rank, \"left\", \"right\", n_occ, l_cnt, r_cnt FROM ${readData("golden_ops/sf0.01/wpm")}",
     "q_stream_near_dup" ->
-      "SELECT a, b, est_pm FROM read_parquet('/root/repo/data/golden_ops/sf0.01/streamnd/*.parquet')",
+      s"SELECT a, b, est_pm FROM ${readData("golden_ops/sf0.01/streamnd")}",
     "q_doc_lm_score" ->
-      "SELECT doc_id, n_trans, lp_micro_tot, lp_micro_per_tok FROM read_parquet('/root/repo/data/golden_ops/sf0.01/lm/*.parquet')",
+      s"SELECT doc_id, n_trans, lp_micro_tot, lp_micro_per_tok FROM ${readData("golden_ops/sf0.01/lm")}",
     "q_doc_entropy" ->
-      "SELECT doc_id, n_toks, n_types, h_micro_tot, h_micro_per_tok FROM read_parquet('/root/repo/data/golden_ops/sf0.01/entropy/*.parquet')",
+      s"SELECT doc_id, n_toks, n_types, h_micro_tot, h_micro_per_tok FROM ${readData("golden_ops/sf0.01/entropy")}",
     "q_ccnet_buckets" ->
       ("WITH lp AS (SELECT doc_id, (lp_micro_per_tok + 100000000) // 1000 AS lp_bin " +
-        "FROM read_parquet('/root/repo/data/golden_ops/sf0.01/lm/*.parquet')), " +
+        s"FROM ${readData("golden_ops/sf0.01/lm")}), " +
         "s AS (SELECT l.doc_id, d.source, l.lp_bin FROM lp l JOIN documents d USING (doc_id)), " +
         "rle AS (SELECT source, lp_bin, count(*) AS cnt FROM s GROUP BY 1, 2), " +
         "n AS (SELECT source, sum(cnt) AS n_docs FROM rle GROUP BY 1), " +
@@ -2974,20 +2978,20 @@ object SparkEntry {
         "CASE WHEN s.lp_bin > t.v2 THEN 'head' WHEN s.lp_bin > t.v1 THEN 'middle' " +
         "ELSE 'tail' END AS bucket FROM s JOIN cuts t USING (source)"),
     "q_doc_lm_backoff" ->
-      "SELECT doc_id, n_trans, lp_micro_tot, lp_micro_per_tok FROM read_parquet('/root/repo/data/golden_ops/sf0.01/sblm/*.parquet')",
+      s"SELECT doc_id, n_trans, lp_micro_tot, lp_micro_per_tok FROM ${readData("golden_ops/sf0.01/sblm")}",
     "q_doc_nb_quality" ->
-      "SELECT doc_id, n_toks, lp1_micro, lp0_micro, margin_micro, nb_label FROM read_parquet('/root/repo/data/golden_ops/sf0.01/nb/*.parquet')",
+      s"SELECT doc_id, n_toks, lp1_micro, lp0_micro, margin_micro, nb_label FROM ${readData("golden_ops/sf0.01/nb")}",
     "q_doc_dsir" ->
-      "SELECT doc_id, n_feats, dsir_micro, dsir_micro_per_feat FROM read_parquet('/root/repo/data/golden_ops/sf0.01/dsir/*.parquet')",
+      s"SELECT doc_id, n_feats, dsir_micro, dsir_micro_per_feat FROM ${readData("golden_ops/sf0.01/dsir")}",
     "q_doc_mojibake" ->
-      "SELECT doc_id, changed, n_chars_before, n_chars_after, text_md5 FROM read_parquet('/root/repo/data/golden_ops/sf0.01/moji/*.parquet')",
+      s"SELECT doc_id, changed, n_chars_before, n_chars_after, text_md5 FROM ${readData("golden_ops/sf0.01/moji")}",
     "q_source_kl" ->
-      "SELECT source, n_toks, kl_micro_scaled, kl_micro_per_tok FROM read_parquet('/root/repo/data/golden_ops/sf0.01/srckl/*.parquet')",
+      s"SELECT source, n_toks, kl_micro_scaled, kl_micro_per_tok FROM ${readData("golden_ops/sf0.01/srckl")}",
     "q_bm25_topk" ->
-      "SELECT q_id, doc_id, rank, score_micro FROM read_parquet('/root/repo/data/golden_ops/sf0.01/bm25/*.parquet')",
+      s"SELECT q_id, doc_id, rank, score_micro FROM ${readData("golden_ops/sf0.01/bm25")}",
     "q_hybrid_rrf_topk" ->
-      ("WITH s AS (SELECT q_id, doc_id, rank FROM read_parquet('/root/repo/data/golden_ops/sf0.01/bm25/*.parquet')), " +
-        "d AS (SELECT q_id, n_id AS doc_id, rank FROM read_parquet('/root/repo/data/golden_ops/sf0.01/ann_brute/*.parquet')), " +
+      (s"WITH s AS (SELECT q_id, doc_id, rank FROM ${readData("golden_ops/sf0.01/bm25")}), " +
+        s"d AS (SELECT q_id, n_id AS doc_id, rank FROM ${readData("golden_ops/sf0.01/ann_brute")}), " +
         "u AS (SELECT q_id, doc_id, 1000000 // (60 + rank) AS c FROM s " +
         "UNION ALL SELECT q_id, doc_id, 1000000 // (60 + rank) AS c FROM d), " +
         "f AS (SELECT q_id, doc_id, sum(c) AS rrf_micro FROM u GROUP BY 1, 2), " +
@@ -2997,17 +3001,17 @@ object SparkEntry {
         "CAST(rank AS BIGINT) AS rank, CAST(rrf_micro AS BIGINT) AS rrf_micro " +
         "FROM r WHERE rank <= 10"),
     "q_media_phash_dup" ->
-      "SELECT a, b, hamming FROM read_parquet('/root/repo/data/golden_ops/sf0.01/phash/*.parquet')",
+      s"SELECT a, b, hamming FROM ${readData("golden_ops/sf0.01/phash")}",
     "q_media_phash_dup_mih" ->
-      "SELECT a, b, hamming FROM read_parquet('/root/repo/data/golden_ops/sf0.01/phash_mih/*.parquet')",
+      s"SELECT a, b, hamming FROM ${readData("golden_ops/sf0.01/phash_mih")}",
     "q_semantic_decontam" ->
-      "SELECT vec_id, eval_id, score_pm FROM read_parquet('/root/repo/data/golden_ops/sf0.01/semdecon/*.parquet')",
+      s"SELECT vec_id, eval_id, score_pm FROM ${readData("golden_ops/sf0.01/semdecon")}",
     "q_temperature_mixture" ->
-      "SELECT doc_id, source, mix_ppm, rate_ppm, keep FROM read_parquet('/root/repo/data/golden_ops/sf0.01/tempmix/*.parquet')",
+      s"SELECT doc_id, source, mix_ppm, rate_ppm, keep FROM ${readData("golden_ops/sf0.01/tempmix")}",
     "q_emb_project" ->
-      "SELECT vec_id, dim, out_micro FROM read_parquet('/root/repo/data/golden_ops/sf0.01/rproj/*.parquet')",
+      s"SELECT vec_id, dim, out_micro FROM ${readData("golden_ops/sf0.01/rproj")}",
     "q_doc_cdc_chunks" ->
-      "SELECT doc_id, chunk_no, n_chars, chunk_md5 FROM read_parquet('/root/repo/data/golden_ops/sf0.01/cdc/*.parquet')",
+      s"SELECT doc_id, chunk_no, n_chars, chunk_md5 FROM ${readData("golden_ops/sf0.01/cdc")}",
     "q_corpus_profile" ->
       ("SELECT CAST(count(*) AS BIGINT) AS n_docs, " +
         "CAST(count(DISTINCT source) AS BIGINT) AS n_sources, " +
@@ -3055,7 +3059,7 @@ object SparkEntry {
         "len(list_filter(toks, x -> list_contains(['slow', 'broken', 'stale'], lower(x)))) AS nb FROM t), " +
         "g AS (SELECT doc_id, n, sumlen * 1000 // greatest(n, 1) AS meanpm, " +
         "CASE WHEN n > 0 THEN nb * 1000 // n ELSE 0 END AS blockedpm FROM s), " +
-        "m AS (SELECT doc_id, nb_label FROM read_parquet('/root/repo/data/golden_ops/sf0.01/nb/*.parquet')) " +
+        s"m AS (SELECT doc_id, nb_label FROM ${readData("golden_ops/sf0.01/nb")}) " +
         "SELECT CAST(g.doc_id AS BIGINT) AS doc_id, " +
         "(m.nb_label = 1 AND g.blockedpm <= 25 AND g.n >= 10 AND g.meanpm BETWEEN 3000 AND 10000) AS keep " +
         "FROM g JOIN m ON g.doc_id = m.doc_id"),
@@ -3065,7 +3069,7 @@ object SparkEntry {
       "SELECT CAST(doc_id AS BIGINT) AS doc_id, domain, " +
       "CAST(CASE WHEN domain IN ('example.com', 'src00.co.uk') THEN 1 ELSE 0 END AS BIGINT) AS opted_out FROM w2"),
     "q_dedup_best_keeper" ->
-      ("WITH c AS (SELECT doc_id, cluster_id FROM read_parquet('/root/repo/data/golden_ops/sf0.01/clusters/*.parquet')), " +
+      (s"WITH c AS (SELECT doc_id, cluster_id FROM ${readData("golden_ops/sf0.01/clusters")}), " +
         "j AS (SELECT c.doc_id, c.cluster_id, length(d.text) AS sc FROM c JOIN documents d USING (doc_id)), " +
         "r AS (SELECT doc_id, cluster_id, row_number() OVER (PARTITION BY cluster_id ORDER BY sc DESC, doc_id ASC) AS rn FROM j) " +
         "SELECT doc_id, cluster_id, CAST(CASE WHEN rn = 1 THEN 1 ELSE 0 END AS BIGINT) AS keep FROM r"),
@@ -3098,13 +3102,13 @@ object SparkEntry {
         "CAST(CASE WHEN n > 0 THEN nb * 1000 // n ELSE 0 END AS BIGINT) AS blocked_pm, " +
         "(CASE WHEN n > 0 THEN nb * 1000 // n ELSE 0 END) > 25 AS blocked_flag FROM s"),
     "q_bpe_encode" ->
-      "SELECT doc_id, n_words, n_pieces, pieces_md5 FROM read_parquet('/root/repo/data/golden_ops/sf0.01/bpeenc/*.parquet')",
+      s"SELECT doc_id, n_words, n_pieces, pieces_md5 FROM ${readData("golden_ops/sf0.01/bpeenc")}",
     // fertility composes the bpeenc golden with the live documents table in
     // plain ANSI aggregates (integer // division == Spark div on the
     // non-negative sums here)
     "q_tokenizer_fertility" ->
       ("WITH e AS (SELECT doc_id, n_words, n_pieces " +
-        "FROM read_parquet('/root/repo/data/golden_ops/sf0.01/bpeenc/*.parquet')), " +
+        s"FROM ${readData("golden_ops/sf0.01/bpeenc")}), " +
         "s AS (SELECT CAST(doc_id AS BIGINT) AS doc_id, source, " +
         "CAST(length(text) AS BIGINT) AS n_chars FROM documents) " +
         "SELECT source, CAST(count(*) AS BIGINT) AS n_docs, " +
@@ -3115,11 +3119,11 @@ object SparkEntry {
         "CAST(sum(s.n_chars) * 1000 // sum(e.n_pieces) AS BIGINT) AS chars_per_piece_pm " +
         "FROM e JOIN s USING (doc_id) GROUP BY source"),
     "q_wordpiece_encode" ->
-      "SELECT doc_id, n_words, n_pieces, pieces_md5 FROM read_parquet('/root/repo/data/golden_ops/sf0.01/wpenc/*.parquet')",
+      s"SELECT doc_id, n_words, n_pieces, pieces_md5 FROM ${readData("golden_ops/sf0.01/wpenc")}",
     "q_unigram_vocab" ->
-      "SELECT rank, piece, n_occ FROM read_parquet('/root/repo/data/golden_ops/sf0.01/ugv/*.parquet')",
+      s"SELECT rank, piece, n_occ FROM ${readData("golden_ops/sf0.01/ugv")}",
     "q_unigram_encode" ->
-      "SELECT doc_id, n_words, n_pieces, pieces_md5 FROM read_parquet('/root/repo/data/golden_ops/sf0.01/ugenc/*.parquet')",
+      s"SELECT doc_id, n_words, n_pieces, pieces_md5 FROM ${readData("golden_ops/sf0.01/ugenc")}",
     "q_doc_gopher_rules" ->
       ("WITH d AS (SELECT doc_id, replace(replace(replace(text, ' table ', '.' || chr(10)), " +
         "' row ', chr(10) || '- '), ' fast ', '...' || chr(10)) AS text FROM documents), " +

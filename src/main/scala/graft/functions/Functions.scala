@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -509,24 +508,4 @@ object Functions {
     org.apache.spark.sql.GraftColumnBridge.column(
       CdcChunksExpr(org.apache.spark.sql.GraftColumnBridge.expression(c),
         maskBits, minLen, maxLen))
-
-  /** Register for the SQL surface on an existing session. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "fix_typos", exprs => FixTyposExpr(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64Expr(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc_normalize", exprs => NfcNormalizeExpr(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "fix_mojibake", exprs => FixMojibakeExpr(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "log_prob_micro",
-      exprs => LogProbMicroExpr(exprs(0), exprs(1), exprs(2)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "entropy_term_micro",
-      exprs => EntropyTermMicroExpr(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cdc_chunks", exprs => CdcChunksExpr(exprs.head, 6, 16, 256), "scala_udf")
-  }
 }

@@ -594,8 +594,7 @@ object Graph {
   }
 
   /** One un-materialized PageRank round — the plan the loop materializes
-    * each iteration (factored out so PLANS.md can exhibit the real iterate
-    * instead of the checkpointed result scan).
+    * each iteration.
     */
   private[graft] def pageRankRound(ids: DataFrame, edgesDeg: DataFrame,
       dangling: DataFrame, ranks: DataFrame, dampingPm: Int,

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.model._
 import graft.parse.{PageParser, DocParser}
-import org.apache.spark.sql.{SparkSession, DataFrame, Dataset, Column}
+import org.apache.spark.sql.{SparkSession, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.TaskContext
 
@@ -20,8 +20,8 @@ final case class PageRes(
 
 /** The distributed extraction pipeline (SURVEY.md §3.1 Spark restatement):
   *
-  *   read snapshot → repartitionByRange(doc_id) → flatMap to pages →
-  *   repartitionByRange(doc_id, page_no)   (mega-doc pages fan out — the
+  *   read snapshot → flatMap to pages →
+  *   repartition(doc_id, page_no)          (mega-doc pages fan out — the
   *   reference's own Electron client chunks 5000-page docs the same way,
   *   parallelProcessor.js:131–260) →
   *   mapPartitions(parse)                  (pooled parser: the regex tables in
@@ -34,6 +34,12 @@ final case class PageRes(
   * Everything after the parse stage is Catalyst built-ins (collect_list,
   * sort_array, flatten, transform), so map-side partial aggregation, AQE
   * coalescing and whole-stage codegen all apply.
+  *
+  * This is the expensive-parse topology: it shuffles every raw span once and
+  * every parsed span twice, which pays off when a page costs seconds (the
+  * reference's GPU OCR). For the cheap deterministic parse, the zero-shuffle
+  * custom node [[graft.plans.ExtractDocs]] parses each document whole inside
+  * one task (BENCH.md shoot-out); both produce identical output.
   */
 object Extraction {
 
@@ -45,18 +51,6 @@ object Extraction {
   def readInput(spark: SparkSession, path: String): Dataset[Doc] = {
     import spark.implicits._
     spark.read.parquet(path).select("doc_id", "spans").as[Doc]
-  }
-
-  /** North-rule input clustering: explicit repartitionByRange on doc_id for
-    * inputs that are not already doc_id-clustered (an Iceberg table sorted on
-    * doc_id would make this a no-op; our corpus writes are generated
-    * doc_id-contiguous, so the pipeline leaves this off by default — the range
-    * exchange costs a sampling pass over the scan, which is only worth paying
-    * for genuinely unclustered input).
-    */
-  def clusterByDocId(docs: Dataset[Doc], numPartitions: Int): Dataset[Doc] = {
-    import docs.sparkSession.implicits._
-    docs.repartitionByRange(numPartitions, col("doc_id")).as[Doc]
   }
 
   /** Stage 1+2: fan docs out into parsed pages.
@@ -95,28 +89,20 @@ object Extraction {
   }
 
   /** Stage 3: salted two-phase page→document assembly (SPEC.md §7–8). */
-  def assemble(parsed: Dataset[PageRes], salted: Boolean = true): DataFrame = {
+  def assemble(parsed: Dataset[PageRes]): DataFrame = {
     val pageStruct = struct(col("page_no"), col("spans"), col("md"), col("html"),
       col("conf_pm"))
-
-    val perDoc =
-      if (salted) {
-        // phase 1: partial per (doc_id, salt) — bounded group size, map-side combine
-        val partial = parsed.toDF()
-          .withColumn("salt", (col("page_no") / lit(PagesPerSaltBucket)).cast("int"))
-          .groupBy(col("doc_id"), col("salt"))
-          .agg(sort_array(collect_list(pageStruct)).as("bucket"))
-        // phase 2: tiny final concat of ordered buckets per doc
-        partial
-          .groupBy(col("doc_id"))
-          .agg(flatten(transform(
-            sort_array(collect_list(struct(col("salt"), col("bucket")))),
-            b => b.getField("bucket"))).as("pages"))
-      } else {
-        parsed.toDF()
-          .groupBy(col("doc_id"))
-          .agg(sort_array(collect_list(pageStruct)).as("pages"))
-      }
+    // phase 1: partial per (doc_id, salt) — bounded group size, map-side combine
+    val partial = parsed.toDF()
+      .withColumn("salt", (col("page_no") / lit(PagesPerSaltBucket)).cast("int"))
+      .groupBy(col("doc_id"), col("salt"))
+      .agg(sort_array(collect_list(pageStruct)).as("bucket"))
+    // phase 2: tiny final concat of ordered buckets per doc
+    val perDoc = partial
+      .groupBy(col("doc_id"))
+      .agg(flatten(transform(
+        sort_array(collect_list(struct(col("salt"), col("bucket")))),
+        b => b.getField("bucket"))).as("pages"))
 
     perDoc.select(
       col("doc_id"),
@@ -146,29 +132,10 @@ object Extraction {
   }
 
   /** Full pipeline: input path → extracted (doc_id, spans, markdown). */
-  def run(spark: SparkSession, inputPath: String,
-          numPartitions: Int = 0, salted: Boolean = true): DataFrame = {
+  def run(spark: SparkSession, inputPath: String, numPartitions: Int = 0): DataFrame = {
     val n = if (numPartitions > 0) numPartitions
             else spark.sparkContext.defaultParallelism * 2
-    assemble(parsePages(readInput(spark, inputPath), n), salted)
-  }
-
-  /** Doc-local, ZERO-shuffle pipeline: parse and assemble each document
-    * whole inside `mapPartitions`.
-    *
-    * Topology choice (measured, BENCH.md): the fan-out path shuffles every
-    * raw span once and every parsed span twice; that is the right trade when
-    * per-page work is expensive (the reference's GPU OCR is ~2 s/page —
-    * 5000-page docs would serialize for hours). Our deterministic parse is
-    * ~0.5 ms/page, so a 5000-page mega-doc costs ~2.5 s serial — cheaper than
-    * shuffling 100 TB of raw spans. Both modes produce identical output
-    * (ExtractionGoldenSpec); pick by parse-cost regime.
-    */
-  def runDocLocal(spark: SparkSession, inputPath: String): DataFrame = {
-    import spark.implicits._
-    readInput(spark, inputPath)
-      .mapPartitions(_.map(DocParser.parseDoc))
-      .toDF("doc_id", "spans", "markdown", "html", "conf_pm")
+    assemble(parsePages(readInput(spark, inputPath), n))
   }
 
   /** Per-partition lineage + extraction metrics (FIXTURES.md §3) from a parsed
@@ -219,28 +186,15 @@ object Extraction {
   def progressPct(done: Long, total: Long): Int =
     if (total <= 0) 0 else ((done.toDouble / total) * 90).toInt
 
-  /** Deterministic totals over the metrics table (the driver-oracled view;
-    * the per-partition rows above are the operational lineage surface, whose
-    * grouping depends on the physical partitioning).
-    */
-  def metricsTotals(metricsDf: DataFrame): DataFrame = {
-    metricsDf.agg(
-      sum(col("pages_parsed")).cast("long").as("total_pages"),
-      sum(col("spans_emitted")).cast("long").as("total_spans"),
-      sum(col("parse_failures")).cast("long").as("total_failures"),
-      sum(col("sum_conf_pm")).cast("long").as("sum_conf_pm"),
-      (sum(col("pages_parsed")) * PricePerPageKrw).cast("long").as("price_krw"))
-  }
-
   /** Deterministic corpus totals computed WITH `observe()` on the parse
     * stage of a single extraction job: the page-level aggregates accumulate
     * as the job's own tasks stream past (a `CollectMetrics` node over the
     * parsed pages — map-side, zero extra shuffle, zero recompute), while the
     * job's real action is the assembled document output (written to the
     * `noop` sink here; a caller with a data sink gets the metrics for free
-    * on its own write). Returns a one-row DataFrame with the exact
-    * [[metricsTotals]] schema. At 100 TB this is the difference between one
-    * pass and two over every parsed page.
+    * on its own write). Returns one row (total_pages, total_spans,
+    * total_failures, sum_conf_pm, price_krw). At 100 TB this is the
+    * difference between one pass and two over every parsed page.
     */
   def metricsTotalsObserved(parsed: Dataset[PageRes]): DataFrame = {
     val spark = parsed.sparkSession
@@ -254,7 +208,7 @@ object Extraction {
     assemble(observed.as[PageRes])
       .write.format("noop").mode("overwrite").save()
     val m = obs.get
-    // sums observe as null on an empty input — surface 0 like metricsTotals
+    // sums observe as null on an empty input — surface 0
     def l(k: String): Long = Option(m(k)).map(_.asInstanceOf[Long]).getOrElse(0L)
     Seq((l("total_pages"), l("total_spans"), l("total_failures"),
         l("sum_conf_pm"), l("total_pages") * PricePerPageKrw))

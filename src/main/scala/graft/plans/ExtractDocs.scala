@@ -17,9 +17,9 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Whole-operator extraction as a custom plan node — tier (c) of the
   * custom-operator ladder (compose built-ins > Expression > LogicalPlan +
   * Strategy + SparkPlan > mapPartitions). The physical node consumes the
-  * input table's InternalRows DIRECTLY (no Doc/InSpan Encoder round-trip —
-  * the typed doc-local path deserializes every span through `mapobjects`,
-  * which this skips) and emits output rows in one map, zero shuffles.
+  * input table's InternalRows DIRECTLY (no Doc/InSpan Encoder round-trip,
+  * which would deserialize every span through `mapobjects`) and emits
+  * output rows in one map, zero shuffles.
   *
   * Child contract: output columns (doc_id STRING, spans ARRAY<STRUCT<kind,
   * text, media_ref STRING, offset INT>>) in that order.
@@ -56,15 +56,10 @@ object ExtractDocs {
     StructField("conf_pm", LongType, nullable = false)))
 
   /** Build the extraction DataFrame over an input table via the custom node.
-    * Registers the strategy on the session (idempotent).
+    * Installs [[GraftExtensions]] on the session (idempotent).
     */
   def over(spark: SparkSession, inputPath: String): DataFrame = {
-    if (!spark.experimental.extraStrategies.contains(ExtractStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ ExtractStrategy
-    if (!spark.experimental.extraOptimizations.contains(PushDocIdFilterThroughExtract))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ PushDocIdFilterThroughExtract
+    GraftExtensions.install(spark)
     val child = spark.read.parquet(inputPath).select("doc_id", "spans")
     org.apache.spark.sql.GraftColumnBridge.ofRows(
       spark, ExtractDocs(org.apache.spark.sql.GraftColumnBridge.logicalPlan(child)))

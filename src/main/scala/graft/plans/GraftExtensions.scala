@@ -1,7 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeSet}
+import graft.functions._
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeSet, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.expressions.PredicateHelper
@@ -36,46 +38,48 @@ object PushDocIdFilterThroughExtract extends Rule[LogicalPlan] with PredicateHel
   }
 }
 
-/** The single spark-submit registration point for everything this library
-  * adds to a session — the extraction strategy, the pushdown rule, and the
-  * `fix_typos`/`simhash64` SQL functions:
-  * `--conf spark.sql.extensions=graft.plans.GraftExtensions`.
-  * [[ExtractDocs.over]] / [[graft.functions.Functions.register]] install the
-  * same pieces at runtime for sessions built without the conf.
+/** Everything this library adds to a Spark session, in one table: the
+  * extraction strategy, the doc_id pushdown rule and the SQL functions.
+  * Two entry points read it — the class below for
+  * `--conf spark.sql.extensions=graft.plans.GraftExtensions`, and
+  * [[GraftExtensions.install]] for a session built without that conf.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => ExtractStrategy)
     ext.injectOptimizerRule(_ => PushDocIdFilterThroughExtract)
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("fix_typos"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[graft.functions.FixTyposExpr].getName, "fix_typos"),
-      exprs => graft.functions.FixTyposExpr(exprs.head)))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("simhash64"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[graft.functions.SimHash64Expr].getName, "simhash64"),
-      exprs => graft.functions.SimHash64Expr(exprs.head)))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("nfc_normalize"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[graft.functions.NfcNormalizeExpr].getName, "nfc_normalize"),
-      exprs => graft.functions.NfcNormalizeExpr(exprs.head)))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("fix_mojibake"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[graft.functions.FixMojibakeExpr].getName, "fix_mojibake"),
-      exprs => graft.functions.FixMojibakeExpr(exprs.head)))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("log_prob_micro"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[graft.functions.LogProbMicroExpr].getName, "log_prob_micro"),
-      exprs => graft.functions.LogProbMicroExpr(exprs(0), exprs(1), exprs(2))))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("entropy_term_micro"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[graft.functions.EntropyTermMicroExpr].getName, "entropy_term_micro"),
-      exprs => graft.functions.EntropyTermMicroExpr(exprs(0), exprs(1))))
+    GraftExtensions.functions.foreach(ext.injectFunction)
+  }
+}
+
+object GraftExtensions {
+  type FunctionDescription = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
+
+  private def fn[E <: Expression](name: String, cls: Class[E])(
+      build: Seq[Expression] => E): FunctionDescription =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
+
+  val functions: Seq[FunctionDescription] = Seq(
+    fn("fix_typos", classOf[FixTyposExpr])(e => FixTyposExpr(e.head)),
+    fn("simhash64", classOf[SimHash64Expr])(e => SimHash64Expr(e.head)),
+    fn("nfc_normalize", classOf[NfcNormalizeExpr])(e => NfcNormalizeExpr(e.head)),
+    fn("fix_mojibake", classOf[FixMojibakeExpr])(e => FixMojibakeExpr(e.head)),
+    fn("log_prob_micro", classOf[LogProbMicroExpr])(e =>
+      LogProbMicroExpr(e(0), e(1), e(2))),
+    fn("entropy_term_micro", classOf[EntropyTermMicroExpr])(e =>
+      EntropyTermMicroExpr(e(0), e(1))),
+    fn("cdc_chunks", classOf[CdcChunksExpr])(e => CdcChunksExpr(e.head, 6, 16, 256)))
+
+  /** Installs the table on a running session (idempotent). */
+  def install(spark: SparkSession): Unit = {
+    val strategies = spark.experimental.extraStrategies
+    if (!strategies.contains(ExtractStrategy))
+      spark.experimental.extraStrategies = strategies :+ ExtractStrategy
+    val rules = spark.experimental.extraOptimizations
+    if (!rules.contains(PushDocIdFilterThroughExtract))
+      spark.experimental.extraOptimizations = rules :+ PushDocIdFilterThroughExtract
+    val registry = spark.sessionState.functionRegistry
+    functions.foreach { case (id, info, build) =>
+      if (!registry.functionExists(id)) registry.registerFunction(id, info, build) }
   }
 }

@@ -5,7 +5,8 @@ import org.scalatest.matchers.should.Matchers
 import graft.model.OutSpan
 import graft.corpus.{Corpus, CorpusGen}
 import graft.oracle.Oracle
-import graft.plans.ExtractDocs
+import graft.plans.{ExtractDocs, ExtractDocsExec, GraftExtensions}
+import org.apache.spark.sql.{GraftColumnBridge, SparkSession}
 
 class CustomPlanSpec extends AnyFunSuite with Matchers {
 
@@ -82,6 +83,10 @@ class CustomPlanSpec extends AnyFunSuite with Matchers {
     import org.apache.spark.sql.{functions => F}
     import org.apache.spark.sql.Column
     val path = Corpus.ensure(spark, "sf0.001")
+    // reference: the sequential oracle's rows, under the node's column names
+    val oracle = spark.createDataset(
+      CorpusGen.genAll(CorpusGen.specFor("sf0.001")).map(Oracle.golden).toSeq).toDF()
+    oracle.columns.toSeq shouldBe ExtractDocs.schema.fieldNames.toSeq
     val predicates: Seq[(String, Column)] = Seq(
       "equality" -> ($"doc_id" === "doc-000000042"),
       "range" -> ($"doc_id" >= "doc-000000090"),
@@ -95,9 +100,9 @@ class CustomPlanSpec extends AnyFunSuite with Matchers {
     for ((name, p) <- predicates) {
       val viaCustom = ExtractDocs.over(spark, path).where(p)
         .select($"doc_id").as[String].collect().sorted.toSeq
-      val viaDocLocal = graft.pipeline.Extraction.runDocLocal(spark, path).where(p)
+      val viaOracle = oracle.where(p)
         .select($"doc_id").as[String].collect().sorted.toSeq
-      withClue(s"predicate $name: ") { viaCustom shouldBe viaDocLocal }
+      withClue(s"predicate $name: ") { viaCustom shouldBe viaOracle }
     }
   }
 
@@ -110,5 +115,28 @@ class CustomPlanSpec extends AnyFunSuite with Matchers {
       .count()
     val golden = Oracle.golden(CorpusGen.genDoc(42, CorpusGen.specFor("sf0.001")))
     n shouldBe golden.spans.size.toLong
+  }
+
+  test("a session configured only through GraftExtensions gets the node, the rule and all seven SQL functions") {
+    val path = Corpus.ensure(spark, "sf0.001")
+    val ext = SparkSessions.isolated(
+      SparkSession.builder().withExtensions(new GraftExtensions))
+    // nothing installed at runtime: everything below comes from the extension
+    ext.experimental.extraStrategies shouldBe empty
+    ext.experimental.extraOptimizations shouldBe empty
+    val calls = Seq("fix_typos('a')", "simhash64('a')", "nfc_normalize('a')",
+      "fix_mojibake('a')", "log_prob_micro(1L, 2L, 10L)",
+      "entropy_term_micro(1L, 2L)", "cdc_chunks('a')")
+    for (c <- calls)
+      withClue(s"$c: ") { ext.sql(s"SELECT $c").collect() should have length 1 }
+
+    val child = ext.read.parquet(path).select("doc_id", "spans")
+    val df = GraftColumnBridge
+      .ofRows(ext, ExtractDocs(GraftColumnBridge.logicalPlan(child)))
+      .where($"doc_id" === "doc-000000042")
+    val plan = df.queryExecution.executedPlan
+    plan.find(_.isInstanceOf[ExtractDocsExec]) shouldBe defined
+    plan.collectLeaves().head.toString should include("EqualTo(doc_id,doc-000000042)")
+    df.count() shouldBe 1L
   }
 }

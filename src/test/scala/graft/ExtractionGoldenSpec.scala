@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 /** The north-rule gate (SURVEY.md §5.2.1): the distributed pipeline must
   * reproduce the sequential oracle's span sequences EXACTLY under
   * (kind, text, media_ref, order) equality per doc_id, plus markdown equality,
-  * at multiple partition counts and with salting on and off.
+  * at multiple partition counts.
   */
 class ExtractionGoldenSpec extends AnyFunSuite with Matchers {
 
@@ -24,8 +24,8 @@ class ExtractionGoldenSpec extends AnyFunSuite with Matchers {
   private lazy val golden: Map[String, Extracted] =
     CorpusGen.genAll(spec).map(d => d.doc_id -> Oracle.golden(d)).toMap
 
-  private def assertMatchesGolden(numPartitions: Int, salted: Boolean): Unit = {
-    val out = Extraction.assemble(Extraction.parsePages(docs, numPartitions), salted)
+  private def assertMatchesGolden(numPartitions: Int): Unit = {
+    val out = Extraction.assemble(Extraction.parsePages(docs, numPartitions))
       .select($"doc_id", $"spans", $"markdown", $"html")
       .as[(String, Seq[OutSpan], String, String)]
       .collect()
@@ -41,30 +41,13 @@ class ExtractionGoldenSpec extends AnyFunSuite with Matchers {
   }
 
   test("golden span-sequence + markdown equality (sf0.001, salted, 8 partitions)") {
-    assertMatchesGolden(8, salted = true)
+    assertMatchesGolden(8)
   }
 
   test("partitioning invariance: identical output at 1, 3 and 17 partitions") {
-    assertMatchesGolden(1, salted = true)
-    assertMatchesGolden(3, salted = true)
-    assertMatchesGolden(17, salted = true)
-  }
-
-  test("salted two-phase assembly == unsalted assembly") {
-    assertMatchesGolden(8, salted = false)
-  }
-
-  test("doc-local zero-shuffle mode == fan-out mode == golden") {
-    val out = docs.mapPartitions(_.map(graft.parse.DocParser.parseDoc))
-      .collect().map(e => e.doc_id -> e).toMap
-    out.keySet shouldBe golden.keySet
-    for ((id, g) <- golden) {
-      withClue(s"doc $id: ") {
-        out(id).spans shouldBe g.spans
-        out(id).markdown shouldBe g.markdown
-        out(id).html shouldBe g.html
-      }
-    }
+    assertMatchesGolden(1)
+    assertMatchesGolden(3)
+    assertMatchesGolden(17)
   }
 
   test("the corpus exercises every output kind") {

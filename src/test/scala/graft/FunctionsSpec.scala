@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 import graft.functions.Functions
+import graft.plans.GraftExtensions
 import graft.parse.Typo
 import org.apache.spark.sql.functions._
 
@@ -19,7 +20,7 @@ class FunctionsSpec extends AnyFunSuite with Matchers {
   }
 
   test("fix_typos SQL registration works and nulls propagate") {
-    Functions.register(spark)
+    GraftExtensions.install(spark)
     spark.sql("SELECT fix_typos('제 1 조') AS c").as[String].head() shouldBe "제1조"
     spark.sql("SELECT fix_typos(CAST(NULL AS STRING)) AS c").head().isNullAt(0) shouldBe true
   }
@@ -36,7 +37,7 @@ class FunctionsSpec extends AnyFunSuite with Matchers {
   }
 
   test("simhash64 expression: codegen, SQL surface, and kernel equality") {
-    Functions.register(spark)
+    GraftExtensions.install(spark)
     val df = spark.range(3).select(Functions.simhash64(
       concat(lit("doc text number "), $"id".cast("string"))).as("h"))
     df.queryExecution.executedPlan.toString should include("*(1) Project [simhash64(")
@@ -49,7 +50,7 @@ class FunctionsSpec extends AnyFunSuite with Matchers {
   }
 
   test("cdc_chunks: codegen, SQL surface, kernel equality, nulls") {
-    Functions.register(spark)
+    GraftExtensions.install(spark)
     val df = spark.range(3).select(Functions.cdc_chunks(
       concat(lit("word soup chunk body content repeated enough times to cross "
         + "a boundary or two for id "), $"id".cast("string")), 4, 8, 64).as("c"))
@@ -67,7 +68,7 @@ class FunctionsSpec extends AnyFunSuite with Matchers {
   }
 
   test("fix_mojibake: codegen, SQL surface, kernel equality, nulls") {
-    Functions.register(spark)
+    GraftExtensions.install(spark)
     val df = spark.range(3).select(Functions.fix_mojibake(
       concat(lit("tÃ¡ble "), $"id".cast("string"))).as("m"))
     df.queryExecution.executedPlan.toString should include("*(1) Project [fix_mojibake(")
@@ -78,7 +79,7 @@ class FunctionsSpec extends AnyFunSuite with Matchers {
   }
 
   test("nfc_normalize: composes decomposed forms, codegen, SQL surface") {
-    Functions.register(spark)
+    GraftExtensions.install(spark)
     // decomposed e + COMBINING ACUTE → é; decomposed Hangul jamo → 한
     val df = spark.range(1).select(Functions.nfc_normalize(
       concat(lit("é "), lit("한"), $"id".cast("string"))).as("n"))
@@ -90,7 +91,7 @@ class FunctionsSpec extends AnyFunSuite with Matchers {
   }
 
   test("log_prob_micro: codegen, SQL surface, kernel equality, type check") {
-    Functions.register(spark)
+    GraftExtensions.install(spark)
     val df = spark.range(3).select(Functions.log_prob_micro(
       $"id", lit(10L), lit(5L)).as("lp"))
     df.queryExecution.executedPlan.toString should include("*(1) Project [log_prob_micro(")
@@ -184,7 +185,7 @@ class FunctionsSpec extends AnyFunSuite with Matchers {
   }
 
   test("non-string arguments fail at analysis time with a clear type error") {
-    Functions.register(spark)
+    GraftExtensions.install(spark)
     val e1 = intercept[Exception](spark.sql("SELECT simhash64(1)").collect())
     e1.getMessage should include("STRING")
     val e2 = intercept[Exception](spark.sql("SELECT fix_typos(1)").collect())

@@ -4,17 +4,46 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 import graft.corpus.Corpus
 import graft.pipeline.Extraction
+import org.apache.spark.sql.{DataFrame, PushedFilters, SparkSession}
+import org.apache.spark.sql.execution.{FileSourceScanLike, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
 import org.apache.spark.sql.functions._
 
 /** Physical-plan assertions: the scale properties the architecture claims
   * must be visible in `.explain` (SURVEY.md §4) — pushdown/pruning at the
   * scan, bounded exchange count, no extra shuffle sneaking in.
+  *
+  * Every SparkEntry query's plan shape is pinned by a one-line fingerprint in
+  * `plan_fingerprints.txt`; on a mismatch the failure message prints the
+  * actual line, so a deliberate plan change is a one-line edit there.
   */
 class PlanSpec extends AnyFunSuite with Matchers {
 
   private lazy val spark = SparkSessions.spark
 
   private lazy val corpusPath = Corpus.ensure(spark, "sf0.001")
+
+  private val testData = "/root/testdata/sf0.001"
+
+  /** Shuffle exchanges, broadcast exchanges, whole-stage-codegen stages and
+    * filters pushed into file scans, subqueries included, of a planned query
+    * (no action runs).
+    */
+  private def fingerprint(df: DataFrame): String = {
+    def tally(f: PartialFunction[SparkPlan, Int]): Int =
+      df.queryExecution.executedPlan.collectWithSubqueries(f).sum
+    val exchanges = tally { case _: ShuffleExchangeLike => 1 }
+    val broadcasts = tally { case _: BroadcastExchangeLike => 1 }
+    val codegen = tally { case _: WholeStageCodegenExec => 1 }
+    val pushed = tally { case s: FileSourceScanLike => PushedFilters.of(s).size }
+    s"exchanges=$exchanges broadcasts=$broadcasts codegen=$codegen pushed=$pushed"
+  }
+
+  /** query name -> recorded fingerprint line */
+  private lazy val recorded: Map[String, String] =
+    scala.io.Source.fromResource("plan_fingerprints.txt").getLines()
+      .filterNot(l => l.isEmpty || l.startsWith("#"))
+      .map { l => val Array(name, fp) = l.split(" ", 2); name -> fp }.toMap
 
   test("comparator-style scan prunes columns and pushes filters to parquet") {
     val df = spark.read.parquet(corpusPath)
@@ -30,12 +59,6 @@ class PlanSpec extends AnyFunSuite with Matchers {
     // 1: hash page fan-out, 2: partial (doc_id, salt) agg, 3: final doc agg
     val exchanges = plan.toString.linesIterator.count(_.contains("Exchange"))
     exchanges shouldBe 3
-  }
-
-  test("unsalted assembly saves one exchange (two total)") {
-    val parsed = Extraction.parsePages(Extraction.readInput(spark, corpusPath), 4)
-    val plan = Extraction.assemble(parsed, salted = false).queryExecution.executedPlan
-    plan.toString.linesIterator.count(_.contains("Exchange")) shouldBe 2
   }
 
   test("assembly aggregates are partial+final hash aggregates (map-side combine)") {
@@ -66,5 +89,26 @@ class PlanSpec extends AnyFunSuite with Matchers {
     asm should include("Window")
     // the window spec's leading argument is its partition key: head_url
     asm should include("windowspecdefinition(head_url")
+  }
+
+  test("query registry parity: every SparkEntry query has an oracle and a plan fingerprint") {
+    val names = SparkEntry.queries.keySet
+    names should have size 173
+    SparkEntry.oracleSql.keySet shouldBe names
+    recorded.keySet shouldBe names
+  }
+
+  test("every SparkEntry query plans to its recorded fingerprint") {
+    // static plans (AQE off) so codegen stages and broadcasts are decided at
+    // planning time; an isolated session so tables other suites cached
+    // cannot replace scans
+    val planning = SparkSessions.isolated(
+      SparkSession.builder().config("spark.sql.adaptive.enabled", "false"))
+    val wrong = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, q) =>
+      val actual = fingerprint(q(planning, testData))
+      if (recorded.get(name).contains(actual)) None else Some(s"$name $actual")
+    }
+    if (wrong.nonEmpty)
+      fail(wrong.mkString("actual lines of the mismatching queries:\n", "\n", ""))
   }
 }

@@ -16,4 +16,16 @@ object SparkSessions {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** A new session over the same SparkContext with its own shared state
+    * (cache manager, catalog), so nothing another suite cached or registered
+    * reaches it. `spark` stays the default and active session.
+    */
+  def isolated(builder: SparkSession.Builder): SparkSession = {
+    val shared = spark
+    val s = builder.create()
+    SparkSession.setDefaultSession(shared)
+    SparkSession.setActiveSession(shared)
+    s
+  }
 }
