@@ -101,13 +101,21 @@ object Dedup {
     * to duplicates, so the signature path never shuffles raw shingles at
     * all (map-side partial aggregation into k-long buffers).
     */
-  def shingles(docs: DataFrame, n: Int): DataFrame = {
+  def shingles(docs: DataFrame, n: Int): DataFrame = ngrams(docs, n, xxhash64(_))
+
+  /** The n-gram strings behind `shingles`, (doc_id, shingle STRING): the
+    * hash-collision check compares distinct counts of the two.
+    */
+  private[graft] def shingleStrings(docs: DataFrame, n: Int): DataFrame =
+    ngrams(docs, n, identity)
+
+  private def ngrams(docs: DataFrame, n: Int, f: Column => Column): DataFrame = {
     val toks = TextOps.splitToks(col("text"))
     docs.select(idLong(col("doc_id"), "doc_id").as("doc_id"), toks.as("toks"))
       .where(size(col("toks")) >= n)
       .select(col("doc_id"), explode(
         transform(sequence(lit(0), size(col("toks")) - n),
-          i => xxhash64(concat_ws(" ", slice(col("toks"), i + 1, lit(n)))))).as("shingle"))
+          i => f(concat_ws(" ", slice(col("toks"), i + 1, lit(n)))))).as("shingle"))
   }
 
   /** Per-shingle pair stream over the df-capped inverted index, aggregated

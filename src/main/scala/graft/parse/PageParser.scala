@@ -43,6 +43,45 @@ object PageParser {
       confPm = 0)
   }
 
+  /** Single-pass reader of the `|`-separated fields of one span payload.
+    * It yields the same fields as `text.split("\\|", n)` with a field-count
+    * `require` and `toInt` on the numeric fields, and it throws on the same
+    * payloads: a missing separator, or a field `Integer.parseInt` rejects.
+    * The last field takes the rest of the text, separators included.
+    */
+  private[graft] final class Fields {
+    private var text = ""
+    private var pos = 0
+    def reset(t: String): Fields = { text = t; pos = 0; this }
+    private def end(): Int = {
+      val e = text.indexOf('|', pos)
+      if (e < 0) throw new IllegalArgumentException(s"too few fields: $text")
+      e
+    }
+    def int(): Int = {
+      val e = end()
+      val v = Integer.parseInt(text, pos, e, 10)
+      pos = e + 1
+      v
+    }
+    def str(): String = {
+      val e = end()
+      val v = text.substring(pos, e)
+      pos = e + 1
+      v
+    }
+    def rest(): String = text.substring(pos)
+  }
+
+  // payload layouts (FIXTURES.md §1); arguments evaluate left to right
+  private[graft] def liftLine(f: Fields, offset: Int): Line =
+    Line(f.int(), f.int(), f.int(), f.int(), f.int(), f.int(), f.int(), f.rest(), offset)
+  private[graft] def liftRegion(f: Fields, mediaRef: String, offset: Int): Region =
+    Region(f.int(), f.int(), f.int(), f.int(), f.str() == "1", f.int(), f.rest(),
+      mediaRef, offset)
+  private[graft] def liftBlock(f: Fields, offset: Int): HtmlBlock =
+    HtmlBlock(f.int(), f.str(), f.int(), f.rest(), offset)
+
   private def parseInner(pageNo: Int, spans: Seq[InSpan]): PageResult = {
     // failure containment first: a poisoned line fails the whole page
     if (spans.exists(s => s.kind == Kind.PdfLine && s.text.contains(ParseFailMarker)))
@@ -53,19 +92,14 @@ object PageParser {
     val regions = scala.collection.mutable.ArrayBuffer.empty[Region]
     val medias = scala.collection.mutable.ArrayBuffer.empty[MediaSpan]
     val blocks = scala.collection.mutable.ArrayBuffer.empty[HtmlBlock]
+    val f = new Fields
 
     spans.foreach { s =>
       s.kind match {
         case Kind.PdfLine =>
-          val p = s.text.split("\\|", 8)
-          require(p.length == 8, s"bad pdf_line: ${s.text}")
-          lines += Line(p(0).toInt, p(1).toInt, p(2).toInt, p(3).toInt,
-            p(4).toInt, p(5).toInt, p(6).toInt, p(7), s.offset)
+          lines += liftLine(f.reset(s.text), s.offset)
         case Kind.PdfRegion =>
-          val p = s.text.split("\\|", 7)
-          require(p.length == 7, s"bad pdf_region: ${s.text}")
-          val r = Region(p(0).toInt, p(1).toInt, p(2).toInt, p(3).toInt,
-            p(4) == "1", p(5).toInt, p(6), s.media_ref, s.offset)
+          val r = liftRegion(f.reset(s.text), s.media_ref, s.offset)
           // detection-stage filters: bordered (model path) requires
           // conf >= 0.4 (layout_analyzer.py:209); borderless (heuristic
           // path) requires area >= 5% of the page — strict integer form
@@ -78,9 +112,7 @@ object PageParser {
         case Kind.Media =>
           medias += MediaSpan(s.text, s.media_ref, s.offset)
         case Kind.HtmlBlock =>
-          val p = s.text.split("\\|", 4)
-          require(p.length == 4, s"bad html_block: ${s.text}")
-          blocks += HtmlBlock(p(0).toInt, p(1), p(2).toInt, p(3), s.offset)
+          blocks += liftBlock(f.reset(s.text), s.offset)
         case Kind.PageBreak => // consumed by the page splitter
         case other => throw new IllegalArgumentException(s"unknown input kind: $other")
       }

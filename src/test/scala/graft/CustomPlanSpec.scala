@@ -139,4 +139,27 @@ class CustomPlanSpec extends AnyFunSuite with Matchers {
     plan.collectLeaves().head.toString should include("EqualTo(doc_id,doc-000000042)")
     df.count() shouldBe 1L
   }
+
+  /** One line per scale: doc count, span count and the wrapping sum of the
+    * per-doc xxhash64 over every output column of `ExtractDocs.over` (a sum,
+    * so row order does not matter).
+    */
+  private def digestLine(sf: String): String = {
+    import org.apache.spark.sql.{functions => F}
+    val rows = ExtractDocs.over(spark, Corpus.ensure(spark, sf))
+      .select(F.xxhash64($"doc_id", $"spans", $"markdown", $"html", $"conf_pm"),
+        F.size($"spans"))
+      .as[(Long, Int)].collect()
+    f"$sf docs=${rows.length} spans=${rows.map(_._2.toLong).sum} " +
+      f"xxhash64_sum=${rows.map(_._1).sum}%016x"
+  }
+
+  test("end-to-end extraction output matches the committed digests (sf0.001, sf0.01)") {
+    // the golden parquet under data/ is a cache the code under test rebuilds;
+    // these lines pin the output bytes independently of it
+    val want = scala.io.Source.fromResource("extraction_digests.txt").getLines()
+      .filter(l => l.nonEmpty && !l.startsWith("#")).toSeq
+    val got = Seq("sf0.001", "sf0.01").map(digestLine)
+    withClue(s"actual lines:\n${got.mkString("\n")}\n") { got shouldBe want }
+  }
 }

@@ -158,4 +158,67 @@ class KernelSpec extends AnyFunSuite with Matchers {
     Boilerplate.keep(HtmlBlock(1, "p", 1, "abcd", 0)) shouldBe true
     Boilerplate.keep(HtmlBlock(1, "p", 1, "abc", 0)) shouldBe false
   }
+
+  // ---- span payload field reader -------------------------------------------
+
+  test("field reader == split + toInt on pdf_line / pdf_region / html_block; failures fail the page") {
+    import scala.util.Try
+    // the lift as it was written with String.split: field-count check, toInt
+    def fields(t: String, n: Int) = {
+      val p = t.split("\\|", n)
+      require(p.length == n, s"bad payload: $t")
+      p
+    }
+    def refLine(t: String) = {
+      val p = fields(t, 8)
+      Line(p(0).toInt, p(1).toInt, p(2).toInt, p(3).toInt, p(4).toInt, p(5).toInt,
+        p(6).toInt, p(7), 3)
+    }
+    def refRegion(t: String) = {
+      val p = fields(t, 7)
+      Region(p(0).toInt, p(1).toInt, p(2).toInt, p(3).toInt, p(4) == "1", p(5).toInt,
+        p(6), "m.png", 3)
+    }
+    def refBlock(t: String) = {
+      val p = fields(t, 4)
+      HtmlBlock(p(0).toInt, p(1), p(2).toInt, p(3), 3)
+    }
+    val f = new PageParser.Fields
+    val kinds: Seq[(String, String => Any, String => Any)] = Seq(
+      (Kind.PdfLine, refLine, t => PageParser.liftLine(f.reset(t), 3)),
+      (Kind.PdfRegion, refRegion, t => PageParser.liftRegion(f.reset(t), "m.png", 3)),
+      (Kind.HtmlBlock, refBlock, t => PageParser.liftBlock(f.reset(t), 3)))
+
+    val named = Seq(
+      "", "|", "1|2|3|4|5|6|7|raw", "1|2|3|4|5|6|7", "1|2|3|4|5|6|7|", "1|2||4|5|6|7|x",
+      "+7|-0|٣|4|5|6|7|x", "2147483648|2|3|4|5|6|7|x", "-2147483648|2|3|4|5|6|7|x",
+      "1|2|3|4|5|6|7|a|b|c", "1|2|3|4|1|500|md", "1|2|3|4|0|500|a|b", "1|2|3|4|01|500|x",
+      "1|2|3|4||500|", "2|p|0|text", "2|p|0|a|b", "2|p|0", "2||0|", "٣|p|+0|x",
+      "2|p|x|y", "+|-|1|2|3|4|5|6", " 1|2|3|4|5|6|7|x", "１|2|3|4|5|6|7|x")
+    val pool = Array("", "0", "7", "+7", "-0", "-", "+", "٣", "١٢", "2147483647",
+      "2147483648", "-2147483648", "-2147483649", "a", " 1", "1", "01", "p", "x y")
+    val rng = new scala.util.Random(11L)
+    val random = Seq.fill(30000) {
+      Seq.fill(rng.nextInt(11))(pool(rng.nextInt(pool.length))).mkString("|")
+    }
+    var ok = 0
+    var failed = 0
+    for ((kind, ref, lift) <- kinds; t <- named ++ random) {
+      val want = Try(ref(t))
+      val got = Try(lift(t))
+      withClue(s"$kind payload '$t': ") {
+        got.isSuccess shouldBe want.isSuccess
+        if (want.isSuccess) {
+          got.get shouldBe want.get
+          ok += 1
+        } else {
+          PageParser.parse(4, Seq(InSpan(kind, t, "m.png", 3))).parseFailed shouldBe true
+          failed += 1
+        }
+      }
+    }
+    // both outcomes are exercised for every kind
+    ok should be > 1000
+    failed should be > 1000
+  }
 }

@@ -2304,6 +2304,30 @@ class OpsSpec extends AnyFunSuite with Matchers {
     run(docs.repartition(5)) shouldBe expected
   }
 
+  test("shingle hashes are collision-free on the containment gate corpora (sf0.001, sf0.01)") {
+    // the q_containment_* oracles re-derive shingle sets as n-gram STRINGS;
+    // a 64-bit hash collision would skew n_sh / n_inter there with no cause
+    // named, so it is pinned here per doc and across docs
+    for (sf <- Seq("sf0.001", "sf0.01")) {
+      val d = spark.read.parquet(s"${dir.replace("sf0.001", sf)}/documents.parquet")
+      def distinct(sh: org.apache.spark.sql.DataFrame, name: String) =
+        sh.groupBy($"doc_id").agg(countDistinct($"shingle").as(name))
+      val perDoc = distinct(Dedup.shingles(d, 3), "hashes")
+        .join(distinct(Dedup.shingleStrings(d, 3), "ngrams"), Seq("doc_id"), "full_outer")
+      val bad = perDoc.where(!($"hashes" <=> $"ngrams"))
+        .as[(Long, Option[Long], Option[Long])].collect().sortBy(_._1)
+      withClue(s"$sf docs whose distinct shingle hashes != distinct 3-gram strings " +
+          "(doc_id, hashes, ngrams): ") {
+        bad.toSeq shouldBe empty
+      }
+      perDoc.count() should be > 0L
+      withClue(s"$sf distinct 3-grams across docs: ") {
+        Dedup.shingles(d, 3).select("shingle").distinct().count() shouldBe
+          Dedup.shingleStrings(d, 3).select("shingle").distinct().count()
+      }
+    }
+  }
+
   test("containmentPairs catches a quoted-superset pair Jaccard-threshold dedup misses") {
     // doc 2 quotes ALL of doc 1 inside 10x unrelated filler: containment is
     // 1000 per-mille but Jaccard is tiny — the structural blind spot the op
